@@ -469,6 +469,10 @@ def adc_scored_kernel(
             "adc_scored_kernel requires bigint ids (the embeddings "
             f"contract); got {id_type}"
         )
+    schema = "id_a bigint, id_b bigint, cosine double"
+    if not query_rows:
+        # no queries, no pairs (the per-batch concatenate needs >= 1)
+        return codes.sparkSession.createDataFrame([], schema)
 
     def gen(batches):
         import numpy as np
@@ -516,9 +520,7 @@ def adc_scored_kernel(
                 ["id_a", "id_b", "cosine"],
             )
 
-    return codes.select("id_b", "codes").mapInArrow(
-        gen, schema="id_a bigint, id_b bigint, cosine double"
-    )
+    return codes.select("id_b", "codes").mapInArrow(gen, schema=schema)
 
 
 def _adc_rank(

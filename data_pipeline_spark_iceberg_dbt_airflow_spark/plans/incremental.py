@@ -1,22 +1,32 @@
 """Incremental materialization -- process only what's new.
 
 The reference's whole pipeline is incremental in shape: an hourly append
-of ~3 rows into the raw table
-(/root/reference/Iceberg-dbt-project/dags/bitcoin_pipeline_dag.py:19,
-scripts/extract_bitcoin_prices.py:193) followed by full-refresh dbt
-models. dbt's own scale answer for the model layer is the INCREMENTAL
-materialization (is_incremental() + a high-watermark predicate); this
-module provides that materialization for the runner: at 100 TB you do not
-rebuild a fact table per run, you transform the rows that arrived since
-the last run and append.
+of ~3 rows into the raw table (Iceberg-dbt-project
+dags/bitcoin_pipeline_dag.py:19, scripts/extract_bitcoin_prices.py:193)
+followed by full-refresh dbt models. dbt's own scale answer for the
+model layer is the INCREMENTAL materialization (is_incremental() + a
+high-watermark predicate); this module provides that materialization
+for the runner: at 100 TB you do not rebuild a fact table per run, you
+transform the rows that arrived since the last run and append.
+
+The target is a snapshot table (``snapshots.py``), the same
+log-structured format as the raw and fct tables: every run commits its
+delta as ONE append snapshot, so a run is atomic (a crash before the
+manifest publish leaves an orphan directory no reader sees, swept by
+``snapshot_vacuum``) and every run boundary stays time-travelable
+(``snapshot_read(version=k)`` is the target as of run k). First run vs
+later run is ``snapshot_exists`` -- a manifest-name check, no Spark job;
+the first run is an append to an empty log. There is no overwrite path,
+so no read fault on an existing target can turn into a rebuild: an
+unreadable log (a torn manifest) raises.
 
 Semantics (mirroring dbt's defaults):
 - First run = full build of the target.
 - Later runs filter the source to ``watermark_col > max(watermark_col in
   target)`` and append the transformed delta. The high-watermark read is
-  one column-pruned aggregate over the target -- parquet column stats
-  make it metadata-cheap, and on Iceberg it comes straight from manifest
-  min/max.
+  one column-pruned aggregate over the target's live files. A run with
+  no new rows still commits (an empty append), so the log holds one
+  version per run.
 - Rows at-or-before the watermark that arrive LATE are dropped, dbt's
   documented incremental caveat; ``lookback`` re-opens a margin of
   ``watermark_col > hw - lookback`` for them, paired with ``unique_key``
@@ -31,25 +41,11 @@ from __future__ import annotations
 from collections.abc import Callable
 from typing import Any
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
-def _target_exists(spark: SparkSession, path: str) -> bool:
-    # Only a definitive path-not-found means "first run". Any other read
-    # failure (permissions, corrupt footer, listing error) must abort:
-    # treating it as not-exists would flip the write to mode('overwrite')
-    # and destroy the existing materialized target on a transient fault.
-    try:
-        spark.read.parquet(path)
-        return True
-    except AnalysisException as ex:
-        cls = ex.getCondition() if hasattr(ex, "getCondition") else None
-        if cls == "PATH_NOT_FOUND" or "PATH_NOT_FOUND" in str(ex):
-            return False
-        raise
+from ..snapshots import snapshot_append, snapshot_exists, snapshot_read
 
 
 def incremental_append(
@@ -62,38 +58,30 @@ def incremental_append(
     lookback: Column | Any | None = None,
     unique_key: str | None = None,
 ) -> DataFrame:
-    """Materialize ``transform(source)`` into ``target_path`` incrementally.
+    """Materialize ``transform(source)`` into the snapshot table at
+    ``target_path`` incrementally.
 
-    Returns the post-write target DataFrame. ``transform`` must be
+    Returns the post-commit target DataFrame. ``transform`` must be
     row-local with respect to ``watermark_col`` windows (a projection /
     filter / per-row derivation) -- the same restriction dbt's incremental
     models live with: aggregates over all history need a full-refresh
     model instead.
     """
-    first_run = not _target_exists(spark, target_path)
-    if first_run:
-        delta = source
-    else:
-        target = spark.read.parquet(target_path)
+    delta = source
+    if snapshot_exists(target_path):
+        target = snapshot_read(spark, target_path)
         hw = target.agg(F.max(watermark_col).alias("hw")).collect()[0]["hw"]
-        if hw is None:
-            delta = source
-        elif lookback is not None:
-            delta = source.where(
-                F.col(watermark_col) > (F.lit(hw) - lookback)
-            )
-            if unique_key is not None:
-                seen = target.where(
-                    F.col(watermark_col) > (F.lit(hw) - lookback)
-                ).select(unique_key)
+        if hw is not None:
+            floor = F.lit(hw) if lookback is None else F.lit(hw) - lookback
+            delta = source.where(F.col(watermark_col) > floor)
+            if lookback is not None and unique_key is not None:
+                seen = target.where(F.col(watermark_col) > floor).select(
+                    unique_key
+                )
                 delta = delta.join(seen, unique_key, "left_anti")
-        else:
-            delta = source.where(F.col(watermark_col) > F.lit(hw))
     out = transform(delta) if transform is not None else delta
-    out.write.mode("append" if not first_run else "overwrite").parquet(
-        target_path
-    )
-    return spark.read.parquet(target_path)
+    snapshot_append(out, target_path)
+    return snapshot_read(spark, target_path)
 
 
 def incremental_dedup_append(
@@ -127,8 +115,9 @@ def incremental_dedup_append(
     keys through as unlistable and ``left_anti`` never matches NULL, so
     every at-least-once replay would re-append the NULL-key row. The
     streaming path (``streaming.jobs.ingest_stream_dedup``) relies on
-    this for its exactly-once-content claim. Returns the post-append
-    target.
+    this for its exactly-once-content claim. Each call is one atomic
+    append commit to the snapshot table at ``target_path`` (an empty one
+    on a replay). Returns the post-append target.
     """
     from ..operators.bloom import blocklist_screen
 
@@ -139,12 +128,11 @@ def incremental_dedup_append(
         .where(F.col("__rn") == 1)
         .drop("__rn")
     )
-    if not _target_exists(spark, target_path):
-        in_batch.write.mode("overwrite").parquet(target_path)
-        return spark.read.parquet(target_path)
-    prior_keys = spark.read.parquet(target_path).select(key_col)
-    fresh = blocklist_screen(
-        in_batch, prior_keys, key_col, bits_per_key=bits_per_key
-    )
-    fresh.write.mode("append").parquet(target_path)
-    return spark.read.parquet(target_path)
+    fresh = in_batch
+    if snapshot_exists(target_path):
+        prior_keys = snapshot_read(spark, target_path).select(key_col)
+        fresh = blocklist_screen(
+            in_batch, prior_keys, key_col, bits_per_key=bits_per_key
+        )
+    snapshot_append(fresh, target_path)
+    return snapshot_read(spark, target_path)

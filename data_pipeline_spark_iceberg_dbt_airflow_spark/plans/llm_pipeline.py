@@ -31,7 +31,8 @@ no new semantics, only the dbt-style composition: each model is a
 ``refs -> DataFrame`` function; the runner topologically orders them,
 memoizes results, and applies the retry policy. At 100 TB each model
 boundary is where a real pipeline materializes a table (swap the
-in-memory handoff for ``incremental_append`` targets); the stage DAG and
+in-memory handoff for ``incremental_append`` targets, snapshot tables
+that commit each run atomically); the stage DAG and
 the operator plans are unchanged by that swap, which is the point of
 keeping orchestration and semantics separate.
 
@@ -100,7 +101,8 @@ SEM_K_BOUND = 250_000
 #: "auto"): the boundary write was being paid anyway to materialize,
 #: and bucketing it removes the corpus re-hash at every downstream
 #: doc_id join -- measured at 200k: -18% total shuffle bytes, -11%
-#: wall, identical survivors (SCALING.md, tools/bucketed_delta.py).
+#: wall, identical survivors (SCALING.md,
+#: f47a063:tools/bucketed_delta.py).
 #: Below the bound the table-write overhead outweighs the join savings
 #: (test-scale corpora), so plain localCheckpoint stays.
 BUCKETED_DAG_BOUND = 100_000

@@ -117,7 +117,8 @@ class PipelineRunner:
         repeatedly (or contain iterative operators) re-executes its
         whole upstream per action. At cluster scale swap the
         checkpoint for real table writes (``incremental_append``
-        targets) -- same boundary, durable storage.
+        targets: snapshot tables, one atomic append commit per run) --
+        same boundary, durable and time-travelable storage.
 
         ``bucket_key`` (implies materialization) is that cluster-scale
         swap with the JOIN LAYOUT priced into the write: every model

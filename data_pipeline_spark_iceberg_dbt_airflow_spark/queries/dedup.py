@@ -163,8 +163,9 @@ def _tokens_col() -> F.Column:
 #: flip to False to fall back. Rationale: transform(sequence(...)) +
 #: per-element md5/conv/substr is CodegenFallback -- interpreted
 #: per-shingle expression eval was the dominant lexical-stage term at 1M
-#: docs (44.2s of ~77s, tools/lexical_attrib.py r10), while hashlib.md5
-#: over Arrow batches does the identical arithmetic at C speed.
+#: docs (44.2s of ~77s, f47a063:tools/lexical_attrib.py r10), while
+#: hashlib.md5 over Arrow batches does the identical arithmetic at C
+#: speed.
 SHINGLE_KERNEL = True
 
 
@@ -418,10 +419,13 @@ def _heap_bytes(spark: SparkSession) -> int:
         if v:
             try:
                 # Spark's JavaUtils grammar: optional one- OR two-letter
-                # suffix ('8g' == '8gb'), case-insensitive; a UNITLESS
-                # value for *.memory is MiB (byteStringAsMb), not bytes.
+                # suffix ('8g' == '8gb', a bare 'b' is bytes),
+                # case-insensitive; a UNITLESS value for *.memory is MiB
+                # (byteStringAsMb), not bytes.
                 s = v.strip().lower()
-                mult = {"k": 2**10, "m": 2**20, "g": 2**30, "t": 2**40}
+                mult = {
+                    "b": 1, "k": 2**10, "m": 2**20, "g": 2**30, "t": 2**40
+                }
                 if s.endswith("b") and len(s) > 1 and s[-2] in mult:
                     return int(float(s[:-2]) * mult[s[-2]])
                 if s and s[-1] in mult:
@@ -552,8 +556,8 @@ def materialize_shingle_index(
     raw-explode + index blocks under execution-memory pressure, and the
     contamination stage silently repaid the recompute -- in-DAG wall
     66.1s vs 14.5s for the same operator over a pinned index
-    (SCALING.md r12, tools/contam_ab.py). Materializing the boundary as
-    a bucketed+sorted doc_id table -- exactly how every other DAG stage
+    (SCALING.md r12, f47a063:tools/contam_ab.py). Materializing the
+    boundary as a bucketed+sorted doc_id table -- exactly how every other DAG stage
     boundary already crosses stages above BUCKETED_DAG_BOUND -- makes
     the second consumer's input a 24-byte-row columnar scan no cache
     tier can take away, and the doc_id bucketing keeps the minhash
@@ -812,7 +816,8 @@ def dedup_exact_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: MinHash geometry: NUM_PERM permutations split into BANDS bands of
 #: ROWS_PER_BAND rows. P(candidate) = 1 - (1 - j^r)^b. Round-10 sweep
-#: (tools/lsh_sweep.py, 1M planted corpus, exact path as reference):
+#: (f47a063:tools/lsh_sweep.py, 1M planted corpus, exact path as
+#: reference):
 #: 8 perms / 4x2 missed 515 of 101,143 true pairs (recall 0.9949,
 #: candidates+verify 8.6s); 16 perms / 8x2 missed 108 (recall 0.9989)
 #: for 10.8s -- ~79% of the drift bought back for ~2s at 1M, so 16/8x2
@@ -1692,8 +1697,8 @@ def split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: instead of the Catalyst transform/md5 expression -- the same
 #: playbook as SHINGLE_KERNEL (r15, VERDICT r14 #3: the interpreted
 #: explode was span_deduped's dominant term, 120.1s/216M spans at 4M
-#: per tools/span_attrib.py, and the composed operator pays it TWICE:
-#: once for the frequent-digest aggregate, once for the flag join).
+#: per f47a063:tools/span_attrib.py, and the composed operator pays it
+#: TWICE: once for the frequent-digest aggregate, once for the flag join).
 #: The expression path stays as the oracle-mirroring reference and is
 #: pinned bit-equal by tests/test_span_kernel.py's differential; the
 #: kernel engages only when the behavioral locale probe certifies

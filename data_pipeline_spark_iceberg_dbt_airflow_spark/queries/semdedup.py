@@ -153,7 +153,7 @@ def pair_kernel_default(n_rows: int, k: int) -> bool:
     pair cost -- a small-k fit over a large corpus (huge cells, the
     interpreted join path's worst case) read as 'small model, stay on
     the join path' (round-9 ADVICE). Exposed so measurement tools
-    (tools/sem_attrib.py) spell the same rule as the operator."""
+    (f47a063:tools/sem_attrib.py) spell the same rule as the operator."""
     return n_rows * n_rows / (2 * max(k, 1)) > PAIR_KERNEL_CANDIDATES
 
 

@@ -328,11 +328,10 @@ def _bucket_col() -> Column:
 
 #: Vector count (embeddings footer) above which ``sim_ann_family``
 #: routes its corpus-sized interpreted HOF folds through Arrow kernels
-#: (r16, VERDICT r15 #4): the LSH bucket assignment (6 folds/row), the
-#: q8 quantization (3 folds/row), the q8 integer retrieve dot (1 fold
-#: per QUERY_N x N pair) and the ivf/lsh pair cosine (1 fold per
-#: candidate pair) are all CodegenFallback expressions -- interpreted
-#: per element -- and together they are the family's corpus-sized cost
+#: (r16, VERDICT r15 #4): the LSH bucket assignment (6 folds/row) and
+#: the ivf/lsh pair cosine (1 fold per candidate pair) are
+#: CodegenFallback expressions -- interpreted per element -- and
+#: together with PQ encode/ADC they are the family's corpus-sized cost
 #: at scale. Below the bound the expression renderings win on fixed
 #: per-task Python/Arrow overhead and stay the oracle-mirroring path
 #: (every verified bench/oracle scale is far below it); above it each
@@ -421,165 +420,6 @@ def _bucket_assign_kernel(emb_n: DataFrame) -> DataFrame:
             )
 
     return emb_n.mapInArrow(gen, schema=f"{schema}, bucket int")
-
-
-_LONG_MAX = (1 << 63) - 1
-_LONG_MIN = -(1 << 63)
-
-
-def _sat_floor_long(y):
-    """java.lang.Math.floor + (long) cast over a float64 array: NaN -> 0,
-    saturate outside int64 -- exactly Spark's floor(double)->LONG."""
-    import numpy as np
-
-    f = np.floor(y)
-    out = np.zeros(f.shape, dtype="int64")
-    fin = np.isfinite(f)
-    inr = fin & (f >= float(_LONG_MIN)) & (f <= float(_LONG_MAX))
-    out[inr] = f[inr].astype("int64")
-    out[fin & (f > float(_LONG_MAX))] = _LONG_MAX
-    out[np.isinf(f) & (f > 0)] = _LONG_MAX
-    out[(np.isinf(f) & (f < 0)) | (fin & (f < float(_LONG_MIN)))] = _LONG_MIN
-    return out
-
-
-def _quantize_kernel(emb_n: DataFrame) -> DataFrame:
-    """(vec_id, qv, inv) -- the q8 symmetric-quantization projection --
-    via ``mapInArrow``, bit-equal to the expression rendering in
-    :func:`_quantized_rerank_scored`:
-
-    - mx = array_max(|x| as double): NULL elements skipped, NaN ranks
-      greatest (propagates), all-NULL/empty -> NULL;
-    - scl/inv take the ELSE 0.0 branch when mx is NULL or <= 0, with
-      Spark's NaN-greatest comparison making when(NaN > 0) TRUE;
-    - qv_i = floor(x_i * scl + 0.5) with Spark's total floor(double)
-      -> LONG semantics (NaN -> 0, saturation at the long range);
-      NULL elements stay NULL, NULL/odd-width rows keep the expression
-      path's NULL results.
-    General-width rows (anything not EMB_DIM wide and element-clean)
-    take a per-row Python path computing the identical IEEE doubles.
-    """
-    import pyarrow as pa
-
-    id_type = emb_n.schema["vec_id"].dataType.simpleString()
-
-    def _row_quant(vals):
-        import math
-
-        if vals is None:
-            return None, 0.0
-        non_null = [abs(float(v)) for v in vals if v is not None]
-        if not non_null:
-            return ([None] * len(vals) if vals else []), 0.0
-        mx = float("nan") if any(math.isnan(a) for a in non_null) else max(
-            non_null
-        )
-        cond = mx > 0 or math.isnan(mx)
-        scl = 127.0 / mx if cond else 0.0
-        inv = mx / 127.0 if cond else 0.0
-        qv = []
-        for v in vals:
-            if v is None:
-                qv.append(None)
-                continue
-            y = float(v) * scl + 0.5
-            if math.isnan(y):
-                qv.append(0)
-            elif y == float("inf"):
-                qv.append(_LONG_MAX)
-            elif y == float("-inf"):
-                qv.append(_LONG_MIN)
-            else:
-                f = math.floor(y)
-                qv.append(max(_LONG_MIN, min(_LONG_MAX, int(f))))
-        return qv, inv
-
-    def gen(batches):
-        import numpy as np
-
-        for batch in batches:
-            emb = batch.column("embedding")
-            ok, x = _list_f64(emb, EMB_DIM)
-            n = len(ok)
-            inv_out = np.zeros(n, dtype="float64")
-            qv_out: list = [None] * n
-            if x.shape[0]:
-                mx = np.max(np.abs(x), axis=1)
-                cond = (mx > 0) | np.isnan(mx)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    scl = np.where(cond, np.divide(127.0, mx), 0.0)
-                    inv_fast = np.where(cond, np.divide(mx, 127.0), 0.0)
-                q = _sat_floor_long(x * scl[:, None] + 0.5)
-                inv_out[ok] = inv_fast
-                for row_i, q_row in zip(np.flatnonzero(ok), q):
-                    qv_out[row_i] = q_row.tolist()
-            if not ok.all():
-                rows = emb.to_pylist()
-                for row_i in np.flatnonzero(~ok):
-                    qv, inv = _row_quant(rows[row_i])
-                    qv_out[row_i] = qv
-                    inv_out[row_i] = inv
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("vec_id"),
-                    pa.array(qv_out, type=pa.list_(pa.int64())),
-                    pa.array(inv_out, type=pa.float64()),
-                ],
-                ["vec_id", "qv", "inv"],
-            )
-
-    return emb_n.select("vec_id", "embedding").mapInArrow(
-        gen, schema=f"vec_id {id_type}, qv array<bigint>, inv double"
-    )
-
-
-def _int_dot_kernel(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Exact BIGINT dot over two int64 array columns -- the q8 retrieve
-    fold. Integer sums are order-independent, so this is bit-trivially
-    equal to the JVM left fold wherever both are defined; a NULL array,
-    width mismatch (zip_with pads with NULL) or NULL element (NULLed
-    product) nulls the JVM fold, mirrored here as None. Magnitudes are
-    bounded by the int8 quantization (|q| <= 127, 64 dims), far inside
-    int64 -- overflow cannot occur on quantized inputs."""
-    import numpy as np
-
-    out: list = [None] * len(a)
-    fast_a = fast_b = None
-    try:
-        fast_a = np.stack(a.to_numpy())
-        fast_b = np.stack(b.to_numpy())
-        if not (
-            fast_a.dtype == np.int64
-            and fast_b.dtype == np.int64
-            and fast_a.shape == fast_b.shape
-        ):
-            fast_a = None
-    except Exception:
-        fast_a = None
-    if fast_a is not None:
-        return pd.Series((fast_a * fast_b).sum(axis=1))
-    for i, (x, y) in enumerate(zip(a, b)):
-        if x is None or y is None or len(x) != len(y):
-            continue
-        acc = 0
-        bad = False
-        for xv, yv in zip(x, y):
-            if (
-                xv is None
-                or yv is None
-                or xv != xv
-                or yv != yv
-            ):
-                bad = True
-                break
-            acc += int(xv) * int(yv)
-        if not bad:
-            out[i] = acc
-    return pd.Series(out, dtype=object)
-
-
-def _int_dot():
-    return F.pandas_udf(_int_dot_kernel, "long")
 
 
 def _pair_cosine_map(joined: DataFrame) -> DataFrame:
@@ -697,7 +537,7 @@ def _pair_cosine_map(joined: DataFrame) -> DataFrame:
 def _ann_kernels_ok(spark: SparkSession) -> bool:
     """One-time-per-session runtime equality probe for the ANN kernels
     (the FP analog of the shingle/span kernels' locale probe): run the
-    bucket, quantize and pair-fold kernels beside their expression
+    bucket and pair-fold kernels beside their expression
     renderings on a fixed adversarial micro-frame and require exact
     equality. Any mismatch disables the kernels for the session (the
     expression path is always correct); the cost is a handful of
@@ -751,35 +591,6 @@ def _ann_kernels_ok(spark: SparkSession) -> bool:
             key(r): r["bucket"] for r in _bucket_assign_kernel(emb_n).collect()
         }
         ok = ok and expr_b == kern_b
-
-        mx = F.array_max(
-            F.transform(
-                F.col("embedding"), lambda x: F.abs(x.cast("double"))
-            )
-        )
-        scl = F.when(mx > 0, F.lit(127.0) / mx).otherwise(F.lit(0.0))
-        inv = F.when(mx > 0, mx / F.lit(127.0)).otherwise(F.lit(0.0))
-        expr_q = {
-            key(r): (r["qv"], r["inv"])
-            for r in emb_n.select(
-                "vec_id",
-                F.zip_with(
-                    F.col("embedding"),
-                    F.array_repeat(scl, F.size(F.col("embedding"))),
-                    lambda x, s_: F.floor(
-                        x.cast("double") * s_ + F.lit(0.5)
-                    ).cast("bigint"),
-                ).alias("qv"),
-                inv.alias("inv"),
-            ).collect()
-        }
-        kern_q = {
-            key(r): (r["qv"], r["inv"])
-            for r in _quantize_kernel(emb_n).collect()
-        }
-        ok = ok and set(expr_q) == set(kern_q) and all(
-            same(list(expr_q[k]), list(kern_q[k])) for k in expr_q
-        )
 
         clean = emb_n.where(
             F.col("embedding").isNotNull()
@@ -1053,8 +864,8 @@ def sim_ann_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r16 size gate (VERDICT r15 #4): above ANN_KERNEL_BOUND vectors
     # (footer count, no Spark job) the family's corpus-sized
     # interpreted folds run as Arrow kernels -- bucket assignment,
-    # q8 quantize + retrieve dot, the ivf/lsh pair cosine, and the
-    # pairs branch's blocked kernel -- each pinned bit-equal by
+    # the ivf/lsh pair cosine, PQ encode + ADC, and the pairs
+    # branch's blocked kernel -- each pinned bit-equal by
     # tests/test_ann_kernels.py and the session's runtime equality
     # probe. Every oracle/bench scale stays on the expression path.
     n_vecs = table_row_count(sf_dir, "embeddings")
@@ -1120,14 +931,12 @@ def sim_ann_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     # before the row_number, saving the branch its own ranking shuffle
     # (identical output -- same partition key, same ordering, same
     # TOP_K cut).
-    # The q8 branch KEEPS the expression rendering at every scale:
-    # its kernel pair (quantize + int-dot pandas_udf) measured SLOWER
-    # at 1M vectors (tools/ann_attrib.py: quantize 0.68s -> 0.76s, q8
-    # branch 3.62s -> 4.79s) -- the retrieve ships BOTH int64 arrays
-    # per pair through Arrow while the JVM integer fold reads the
-    # query side from the broadcast relation. The kernels stay
-    # available (kernel=True) and differential-pinned for shapes where
-    # the trade flips (e.g. a wider quantized payload).
+    # The q8 branch is expression-only at every scale: an Arrow kernel
+    # pair (quantize + int-dot pandas_udf) measured SLOWER at 1M vectors
+    # (quantize 0.68s -> 0.76s, q8 branch 3.62s -> 4.79s;
+    # f47a063:tools/ann_attrib.py) -- the retrieve ships
+    # BOTH int64 arrays per pair through Arrow while the JVM integer
+    # fold reads the query side from the broadcast relation.
     q8_scored = _quantized_rerank_scored(emb_n).select(
         F.lit("q8").alias("method"), "id_a", "id_b", "cosine"
     )
@@ -1216,7 +1025,8 @@ def sim_ann_family(spark: SparkSession, sf_dir: str) -> DataFrame:
             # r16 (VERDICT r15 #4): the branch's two corpus-sized
             # interpreted folds -- the per-row encode argmin and the
             # per-pair ADC dot/norm folds (12.7s + 13.2s of the 1M
-            # family, tools/ann_attrib.py) -- run as Arrow kernels.
+            # family, f47a063:tools/ann_attrib.py) -- run as Arrow
+            # kernels.
             # The ADC kernel folds the collected queries into the PQ
             # paper's lookup tables driver-side (exact IEEE doubles,
             # same add order) and streams CODES only: m bytes per
@@ -1336,7 +1146,6 @@ def sim_ann_family(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _quantized_rerank_scored(
     emb_n: DataFrame,
     rerank_n: int = QUANT_RERANK_N,
-    kernel: bool = False,
 ) -> DataFrame:
     """int8-quantized retrieve + exact-cosine rerank (two-stage ANN).
 
@@ -1379,38 +1188,26 @@ def _quantized_rerank_scored(
     # array_repeat evaluates scl ONCE per row and fills; x * s + 0.5 is
     # the same doubles in the same order, so codes (and the oracle
     # differential) are bit-identical to the old rendering.
-    # r16: above the family's size gate the per-row quantization runs
-    # as the Arrow kernel (bit-equal; see _quantize_kernel) and the
-    # per-pair BIGINT retrieve dot as a vectorized pandas_udf (exact
-    # integer arithmetic -- order-free, trivially bit-equal).
-    qz = (
-        _quantize_kernel(emb_n)
-        if kernel
-        else emb_n.select(
-            "vec_id",
-            F.zip_with(
-                F.col("embedding"),
-                F.array_repeat(scl, F.size(F.col("embedding"))),
-                lambda x, s: F.floor(x.cast("double") * s + F.lit(0.5)).cast(
-                    "bigint"
-                ),
-            ).alias("qv"),
-            inv.alias("inv"),
-        )
+    qz = emb_n.select(
+        "vec_id",
+        F.zip_with(
+            F.col("embedding"),
+            F.array_repeat(scl, F.size(F.col("embedding"))),
+            lambda x, s: F.floor(x.cast("double") * s + F.lit(0.5)).cast(
+                "bigint"
+            ),
+        ).alias("qv"),
+        inv.alias("inv"),
     )
     q8q = qz.where(F.col("vec_id") < QUERY_N).select(
         F.col("vec_id").alias("id_a"),
         F.col("qv").alias("q_qv"),
         F.col("inv").alias("q_inv"),
     )
-    idot = (
-        _int_dot()(F.col("q_qv"), F.col("qv"))
-        if kernel
-        else F.aggregate(
-            F.zip_with(F.col("q_qv"), F.col("qv"), lambda x, y: x * y),
-            F.lit(0).cast("bigint"),
-            lambda acc, v: acc + v,
-        )
+    idot = F.aggregate(
+        F.zip_with(F.col("q_qv"), F.col("qv"), lambda x, y: x * y),
+        F.lit(0).cast("bigint"),
+        lambda acc, v: acc + v,
     )
     approx = qz.join(F.broadcast(q8q), F.col("vec_id") != F.col("id_a")).select(
         "id_a",

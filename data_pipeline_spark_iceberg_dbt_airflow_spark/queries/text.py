@@ -914,8 +914,8 @@ def _lm_stream_kernel(
 
 
 #: Engage the Arrow scoring kernel in lm_score_docs_grouped (r13,
-#: VERDICT r12 task 4). Attribution at 1M (tools/lm_attrib.py): the
-#: scoring half's dominant term is the THREE broadcast probes over the
+#: VERDICT r12 task 4). Attribution at 1M (f47a063:tools/lm_attrib.py):
+#: the scoring half's dominant term is the THREE broadcast probes over the
 #: ~59M-row bigram stream (stream 3.4s -> +joins 12.6s -> +decimal agg
 #: 13.5s), and the composed stage pays ~3 redundant corpus passes
 #: because each model-table broadcast re-runs the unigram lineage. The
@@ -991,12 +991,12 @@ def lm_score_docs_grouped(
     paths (differential-tested). Both paths also pin the uni/totals
     frames once (the r13 checkpoint below) -- without it every
     broadcast tier re-ran their corpus-scan lineage (~3 redundant
-    passes at 1M, tools/lm_attrib.py). Measured composed at 1M:
+    passes at 1M, f47a063:tools/lm_attrib.py). Measured composed at 1M:
     35.8s -> 13.3s.
     """
     g = F.col(group_col).alias("g")
-    # r13 (tools/lm_attrib.py): pin the two model frames every tier
-    # derives from -- without this each broadcast exchange re-runs the
+    # r13 (f47a063:tools/lm_attrib.py): pin the two model frames every
+    # tier derives from -- without this each broadcast exchange re-runs the
     # unigram/totals corpus-scan lineage independently (~3 redundant
     # corpus passes measured inside the composed stage at 1M). Both are
     # corpus-SUBLINEAR (distinct tokens / one row per group), so the

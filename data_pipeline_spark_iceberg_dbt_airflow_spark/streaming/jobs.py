@@ -223,7 +223,10 @@ def ingest_stream_dedup(
     """Streaming corpus ingest with cross-batch exact dedup: each
     micro-batch runs ``plans.incremental.incremental_dedup_append``
     via foreachBatch -- keep-first within the batch, bloom-screened
-    against every previously ingested digest, then appended.
+    against every previously ingested digest, then committed as one
+    append snapshot, so ``target_path`` is a snapshot table (read it
+    with ``snapshots.snapshot_read``) and every micro-batch boundary
+    is atomic and time-travelable.
 
     This is the streaming face of the incremental ingest path: the
     file-source checkpoint gives at-least-once micro-batches, and the
@@ -282,10 +285,10 @@ def ingest_stream_snapshots(
     composed with the dedup screen; a REPLAYED batch here commits a new
     version with duplicate rows -- by design, because the snapshot log
     is exactly the audit trail that makes the replay visible and
-    revertible (snapshot_rollback). For content-level exactly-once use
-    ``ingest_stream_dedup``; for auditability use this; a production
-    pipeline chains both (dedup screen inside the foreachBatch, commit
-    through the snapshot layer).
+    revertible (snapshot_rollback). For content-level exactly-once
+    use ``ingest_stream_dedup``, which runs the dedup screen inside the
+    foreachBatch and commits through this same snapshot layer; use
+    this where the replay itself must stay in the table.
     """
     from ..snapshots import snapshot_append
 

@@ -822,6 +822,7 @@ def test_heap_bytes_matches_spark_byte_string_grammar():
     assert _heap_bytes(_Spark("8g")) == 8 * 2**30
     assert _heap_bytes(_Spark("512MB")) == 512 * 2**20
     assert _heap_bytes(_Spark("1T")) == 2**40
+    assert _heap_bytes(_Spark("8b")) == 8  # a bare 'b' is bytes
     # unitless == MiB, Spark's byteStringAsMb semantics
     assert _heap_bytes(_Spark("4096")) == 4096 * 2**20
     # unparseable falls through to the 1 GiB default, never raises

@@ -191,11 +191,17 @@ def test_global_shuffle_avoids_global_window(spark, sf_dir):
 
 def test_incremental_append_matches_full_rebuild(spark, sf_dir, tmp_path):
     """Three incremental runs over a growing source converge to exactly
-    the full-rebuild result; a no-new-data run appends nothing."""
+    the full-rebuild result; a no-new-data run appends nothing. Every
+    run is one append snapshot, and time travel to version k returns
+    the full rebuild of run k's source."""
     from pyspark.sql import functions as F
 
     from data_pipeline_spark_iceberg_dbt_airflow_spark.plans.incremental import (
         incremental_append,
+    )
+    from data_pipeline_spark_iceberg_dbt_airflow_spark.snapshots import (
+        snapshot_read,
+        snapshot_versions,
     )
 
     ev = read_table(spark, sf_dir, "events")
@@ -206,8 +212,8 @@ def test_incremental_append_matches_full_rebuild(spark, sf_dir, tmp_path):
         "event_id", "ts", "user_id", (F.col("value") * 2).alias("v2")
     )
     tgt = str(tmp_path / "fct_events")
-    for cut in (c1, c2, None):
-        src = ev.where(F.col("ts") <= cut) if cut is not None else ev
+    sources = [ev.where(F.col("ts") <= c) for c in (c1, c2)] + [ev]
+    for src in sources:
         out = incremental_append(
             spark, src, tgt, watermark_col="ts", transform=transform
         )
@@ -223,27 +229,66 @@ def test_incremental_append_matches_full_rebuild(spark, sf_dir, tmp_path):
     )
     assert again.count() == want.count()
 
+    ops = [
+        r["operation"]
+        for r in snapshot_versions(spark, tgt).orderBy("version").collect()
+    ]
+    assert ops == ["append"] * 4, ops
+    for k, src in enumerate(sources + [ev]):
+        at_k = snapshot_read(spark, tgt, version=k)
+        assert at_k.count() == src.count()
+        assert at_k.exceptAll(transform(src)).count() == 0, k
 
-def test_incremental_target_probe_raises_on_non_missing_failure(
-    spark, tmp_path
-):
-    """_target_exists treats ONLY a definitive path-not-found as 'first
-    run'. Any other read failure must raise: silently reporting
-    first_run=True would flip the write to overwrite and destroy the
-    existing target on a transient fault (round-3 advisor finding)."""
-    import pytest
 
+def test_incremental_target_commit_faults(spark, tmp_path, monkeypatch):
+    """The staging target lives on the snapshot log, so a run is atomic:
+    a crash between the data write and the manifest publish leaves an
+    orphan directory no read sees, the re-run holds every source row
+    exactly once, and vacuum sweeps the orphan. A torn manifest raises
+    instead of re-bootstrapping the target."""
+    import datetime as dt
+    import os
+
+    import data_pipeline_spark_iceberg_dbt_airflow_spark.snapshots as snap
     from data_pipeline_spark_iceberg_dbt_airflow_spark.plans.incremental import (
-        _target_exists,
+        incremental_append,
     )
 
-    assert _target_exists(spark, str(tmp_path / "never_written")) is False
-    # An existing-but-unreadable target (here: a dir with no parquet
-    # footers to infer a schema from) is NOT "does not exist".
-    broken = tmp_path / "broken_target"
-    broken.mkdir()
-    with pytest.raises(Exception, match="(?i)schema|parquet"):
-        _target_exists(spark, str(broken))
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [(i, t0 + dt.timedelta(hours=i)) for i in range(6)]
+    mk = lambda rs: spark.createDataFrame(rs, "id bigint, ts timestamp")
+    tgt = str(tmp_path / "stg")
+    ids = lambda df: sorted(r.id for r in df.collect())
+
+    incremental_append(spark, mk(rows[:3]), tgt, watermark_col="ts")
+
+    publish = snap._publish
+
+    def crash_once(*args, **kwargs):
+        monkeypatch.setattr(snap, "_publish", publish)
+        raise OSError("killed before the manifest publish")
+
+    monkeypatch.setattr(snap, "_publish", crash_once)
+    with pytest.raises(OSError, match="killed"):
+        incremental_append(spark, mk(rows), tgt, watermark_col="ts")
+    # the orphan directory is on disk but invisible to readers
+    assert len(os.listdir(os.path.join(tgt, "data"))) == 2
+    assert snap.snapshot_versions(spark, tgt).count() == 1
+    assert ids(snap.snapshot_read(spark, tgt)) == [0, 1, 2]
+
+    out = incremental_append(spark, mk(rows), tgt, watermark_col="ts")
+    assert ids(out) == list(range(6))  # every source row exactly once
+    assert snap.snapshot_versions(spark, tgt).count() == 2
+    removed = snap.snapshot_vacuum(tgt)
+    assert len(removed) == 1 and os.path.dirname(removed[0]).endswith("data")
+    assert ids(snap.snapshot_read(spark, tgt)) == list(range(6))
+
+    # a torn manifest must surface, never read as "no target yet"
+    with open(os.path.join(tgt, "_snapshots", "v00000002.json"), "w") as f:
+        f.write('{"version": 2, "par')
+    with pytest.raises(ValueError):
+        incremental_append(spark, mk(rows), tgt, watermark_col="ts")
+    assert len(os.listdir(os.path.join(tgt, "data"))) == 2
 
 
 def test_incremental_lookback_recovers_late_rows_once(spark, tmp_path):

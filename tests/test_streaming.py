@@ -265,6 +265,9 @@ def test_stream_ingest_dedup_exactly_once_content(spark, tmp_path):
     draining the same source again via a fresh stream adds nothing."""
     from pyspark.sql import functions as F
 
+    from data_pipeline_spark_iceberg_dbt_airflow_spark.snapshots import (
+        snapshot_read,
+    )
     from data_pipeline_spark_iceberg_dbt_airflow_spark.streaming import (
         ingest_stream_dedup,
     )
@@ -294,7 +297,7 @@ def test_stream_ingest_dedup_exactly_once_content(spark, tmp_path):
         key_col="digest",
         order_col="doc_id",
     )
-    got = spark.read.parquet(target)
+    got = snapshot_read(spark, target)
     assert got.groupBy("digest").count().where("count > 1").count() == 0
     assert {r["text"] for r in got.collect()} == {"alpha", "beta", "gamma"}
 
@@ -306,7 +309,7 @@ def test_stream_ingest_dedup_exactly_once_content(spark, tmp_path):
         key_col="digest",
         order_col="doc_id",
     )
-    assert spark.read.parquet(target).count() == 3
+    assert snapshot_read(spark, target).count() == 3
 
 
 def test_stream_ingest_checkpoint_restart_processes_only_new_files(
@@ -319,6 +322,9 @@ def test_stream_ingest_checkpoint_restart_processes_only_new_files(
     screen."""
     from pyspark.sql import functions as F
 
+    from data_pipeline_spark_iceberg_dbt_airflow_spark.snapshots import (
+        snapshot_read,
+    )
     from data_pipeline_spark_iceberg_dbt_airflow_spark.streaming import (
         ingest_stream_dedup,
     )
@@ -345,18 +351,18 @@ def test_stream_ingest_checkpoint_restart_processes_only_new_files(
     ingest_stream_dedup(
         stream(), target, ckpt, key_col="digest", order_col="doc_id"
     )
-    assert spark.read.parquet(target).count() == 2
+    assert snapshot_read(spark, target).count() == 2
 
     # downtime: a new file lands; restart on the SAME checkpoint
     write_batch("b1", [(3, "gamma"), (4, "alpha")])
     ingest_stream_dedup(
         stream(), target, ckpt, key_col="digest", order_col="doc_id"
     )
-    got = {(r["doc_id"], r["text"]) for r in spark.read.parquet(target).collect()}
+    got = {(r["doc_id"], r["text"]) for r in snapshot_read(spark, target).collect()}
     assert got == {(1, "alpha"), (2, "beta"), (3, "gamma")}
 
     # idle restart: nothing new => nothing appended
     ingest_stream_dedup(
         stream(), target, ckpt, key_col="digest", order_col="doc_id"
     )
-    assert spark.read.parquet(target).count() == 3
+    assert snapshot_read(spark, target).count() == 3

@@ -13,7 +13,7 @@ Usage: python tools/curation_stress.py [n_docs] [corpus_dir]
            [--learned | --junk] [--bucketed]
 
 ``corpus_dir`` (plain runs only) reuses/creates a persistent corpus via
-``dfcap_sweep.ensure_corpus`` so repeated measurements at one size skip
+``ensure_corpus`` so repeated measurements at one size skip
 the generation cost; junk runs keep their own tempdir (the junk plant
 is a different corpus). ``--bucketed`` materializes each stage exactly
 as ``run_llm_curation``'s above-``BUCKETED_DAG_BOUND`` auto default
@@ -184,6 +184,89 @@ def make_corpus(n: int, with_junk: bool = False):
     return rows, junk_ids
 
 
+def ensure_corpus(spark, sf_dir: str, n_docs: int) -> None:
+    """Reuse the plain corpus at ``sf_dir/documents.parquet`` or write it
+    once."""
+    path = os.path.join(sf_dir, "documents.parquet")
+    if os.path.exists(path):
+        # a reused corpus dir must actually hold n_docs, or the
+        # per-stage figures silently mislabel the measurement
+        import pyarrow.parquet as pq
+
+        found = pq.ParquetFile(path).metadata.num_rows
+        if found != n_docs:
+            raise SystemExit(
+                f"corpus dir {sf_dir} holds {found} docs, not the "
+                f"requested {n_docs}: point each size at its own dir"
+            )
+        return
+    os.makedirs(sf_dir, exist_ok=True)
+    if n_docs > 2_000_000:
+        # r13 (the 16M scale point): materializing the corpus as Python
+        # tuples costs ~0.5 KB/doc of driver memory and a monolithic
+        # createDataFrame pickle -- stream the IDENTICAL row sequence
+        # (iter_corpus, same RNG) straight into one
+        # parquet file in 500k-row groups instead. Same rows, no Spark
+        # job, bounded memory.
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        tmp = path + ".tmp"
+        cols: dict = {
+            "doc_id": [],
+            "text": [],
+            "lang": [],
+            "source": [],
+            "n_chars": [],
+        }
+        writer = None
+
+        def flush():
+            nonlocal writer
+            if not cols["doc_id"]:
+                return
+            t = pa.table(
+                {
+                    "doc_id": pa.array(cols["doc_id"], pa.int64()),
+                    "text": pa.array(cols["text"], pa.string()),
+                    "lang": pa.array(cols["lang"], pa.string()),
+                    "source": pa.array(cols["source"], pa.string()),
+                    "n_chars": pa.array(cols["n_chars"], pa.int64()),
+                }
+            )
+            if writer is None:
+                writer = pq.ParquetWriter(tmp, t.schema)
+            writer.write_table(t)
+            for v in cols.values():
+                v.clear()
+
+        for (doc_id, text, lang, source, n_chars), _ in iter_corpus(
+            n_docs
+        ):
+            cols["doc_id"].append(doc_id)
+            cols["text"].append(text)
+            cols["lang"].append(lang)
+            cols["source"].append(source)
+            cols["n_chars"].append(n_chars)
+            if len(cols["doc_id"]) >= 500_000:
+                flush()
+        flush()
+        if writer is not None:
+            writer.close()
+        os.rename(tmp, path)
+        return
+    corpus, _ = make_corpus(n_docs)
+    stage = os.path.join(sf_dir, "_stage")
+    spark.createDataFrame(
+        corpus,
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).coalesce(1).write.mode("overwrite").parquet(stage)
+    part = next(n for n in os.listdir(stage) if n.endswith(".parquet"))
+    os.rename(
+        os.path.join(stage, part), os.path.join(sf_dir, "documents.parquet")
+    )
+
+
 def main() -> None:
     from pyspark.sql import SparkSession
 
@@ -218,9 +301,7 @@ def main() -> None:
         junk_ids: list[int] = []
         if CORPUS_DIR is not None:
             # plain corpus, persistent dir: reuse (row-count-validated)
-            # or build once via the shared helper
-            from tools.dfcap_sweep import ensure_corpus
-
+            # or build once
             ensure_corpus(spark, sf_dir, N_DOCS)
         else:
             corpus, junk_ids = make_corpus(N_DOCS, with_junk=JUNK)
