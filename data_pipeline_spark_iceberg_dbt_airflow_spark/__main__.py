@@ -436,7 +436,8 @@ def _dispatch(args: argparse.Namespace, spark) -> int:
         for r in snapshot_versions(spark, args.table_dir).collect():
             print(
                 f"v{r['version']}\tparent={r['parent']}\t{r['operation']}"
-                f"\tdirs={r['n_dirs']}\tat={r['committed_at_ns']}"
+                f"\tdirs={r['n_dirs']}\trows={r['rows']}"
+                f"\tat={r['committed_at_ns']}"
             )
         return 0
 

@@ -425,7 +425,9 @@ def adc_scored_kernel(
     Arrow once, instead of one interpreted fold per pair over a
     broadcast join. Pairs with id_b == id_a are skipped (the join
     condition); a non-positive q_nrm or r_nrm yields NULL cosine
-    (Spark's NaN-greatest comparison mirrored for the NaN case).
+    (Spark's NaN-greatest comparison mirrored for the NaN case), and
+    positive norms whose product underflows to 0 raise DIVIDE_BY_ZERO,
+    as the expression's ANSI Divide does.
     Bit-equality pinned by tests/test_ann_kernels.py."""
     import math
 
@@ -501,8 +503,16 @@ def adc_scored_kernel(
                     dot += dt[qi, s][cmat[:, s]]
                 qn_i = qn_list[qi]
                 cond = rn_ok & ((qn_i > 0) or math.isnan(qn_i))
+                den = qn_i * rn
+                if (keep & cond & (den == 0)).any():
+                    # both norms positive but their product underflowed:
+                    # the expression's Divide raises under ANSI
+                    raise ArithmeticError(
+                        "DIVIDE_BY_ZERO: norm product underflowed in "
+                        "adc_scored_kernel (ANSI parity)"
+                    )
                 with np.errstate(invalid="ignore", divide="ignore"):
-                    cos = dot / (qn_i * rn)
+                    cos = dot / den
                 out_a.append(np.full(int(keep.sum()), qids[qi], dtype="int64"))
                 out_b.append(ids[keep])
                 out_c.append(cos[keep])

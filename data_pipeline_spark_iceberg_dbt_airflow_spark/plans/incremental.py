@@ -23,10 +23,14 @@ unreadable log (a torn manifest) raises.
 Semantics (mirroring dbt's defaults):
 - First run = full build of the target.
 - Later runs filter the source to ``watermark_col > max(watermark_col in
-  target)`` and append the transformed delta. The high-watermark read is
-  one column-pruned aggregate over the target's live files. A run with
-  no new rows still commits (an empty append), so the log holds one
-  version per run.
+  target)`` and append the transformed delta. The high-watermark comes
+  from the target's manifest summary (``snapshots.snapshot_summary``),
+  as Iceberg plans it from manifest column bounds: no Spark job. A
+  watermark column must therefore be an integer, floating-point, date
+  or timestamp column (``snapshots.STAT_TYPES``); any other type
+  raises ``TypeError``. A warm run costs one Spark job, the delta's
+  write. A run with no new rows still commits (an empty append), so
+  the log holds one version per run.
 - Rows at-or-before the watermark that arrive LATE are dropped, dbt's
   documented incremental caveat; ``lookback`` re-opens a margin of
   ``watermark_col > hw - lookback`` for them, paired with ``unique_key``
@@ -45,7 +49,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..snapshots import snapshot_append, snapshot_exists, snapshot_read
+from ..snapshots import (
+    snapshot_append,
+    snapshot_exists,
+    snapshot_read,
+    snapshot_summary,
+)
 
 
 def incremental_append(
@@ -69,12 +78,21 @@ def incremental_append(
     """
     delta = source
     if snapshot_exists(target_path):
-        target = snapshot_read(spark, target_path)
-        hw = target.agg(F.max(watermark_col).alias("hw")).collect()[0]["hw"]
+        summary = snapshot_summary(target_path)
+        if watermark_col not in summary["stats"]:
+            raise TypeError(
+                f"watermark column {watermark_col!r} of {target_path} has "
+                "no recorded max: it must be an integer, floating-point, "
+                "date or timestamp column"
+            )
+        hw = summary["stats"][watermark_col][1]
         if hw is not None:
             floor = F.lit(hw) if lookback is None else F.lit(hw) - lookback
             delta = source.where(F.col(watermark_col) > floor)
             if lookback is not None and unique_key is not None:
+                target = snapshot_read(
+                    spark, target_path, version=summary["version"]
+                )
                 seen = target.where(F.col(watermark_col) > floor).select(
                     unique_key
                 )

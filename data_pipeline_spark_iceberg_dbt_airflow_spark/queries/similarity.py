@@ -335,11 +335,13 @@ def _bucket_col() -> Column:
 #: at scale. Below the bound the expression renderings win on fixed
 #: per-task Python/Arrow overhead and stay the oracle-mirroring path
 #: (every verified bench/oracle scale is far below it); above it each
-#: kernel is pinned bit-equal by tests/test_ann_kernels.py AND by the
-#: session's one-time runtime equality probe (_ann_kernels_ok), the
-#: same belt-and-braces posture as the span/shingle kernels' locale
-#: probe. Both sides of the bound compute identical rows by those
-#: pins, so the gate is purely a cost choice.
+#: kernel is pinned bit-equal by tests/test_ann_kernels.py. The
+#: session's one-time runtime equality probe (_ann_kernels_ok) re-checks
+#: only the bucket-assignment and pair-cosine kernels, the same
+#: belt-and-braces posture as the span/shingle kernels' locale probe;
+#: pq_encode_kernel, adc_scored_kernel and the blocked-pairs kernel are
+#: pinned by the tests alone. Both sides of the bound compute identical
+#: rows by those pins, so the gate is purely a cost choice.
 ANN_KERNEL_BOUND = 250_000
 
 _ANN_PROBE_CACHE: dict[str, bool] = {}
@@ -866,8 +868,9 @@ def sim_ann_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     # interpreted folds run as Arrow kernels -- bucket assignment,
     # the ivf/lsh pair cosine, PQ encode + ADC, and the pairs
     # branch's blocked kernel -- each pinned bit-equal by
-    # tests/test_ann_kernels.py and the session's runtime equality
-    # probe. Every oracle/bench scale stays on the expression path.
+    # tests/test_ann_kernels.py. The session's runtime equality probe
+    # re-checks the bucket and pair-cosine kernels only. Every
+    # oracle/bench scale stays on the expression path.
     n_vecs = table_row_count(sf_dir, "embeddings")
     use_kernel = (
         n_vecs is not None

@@ -279,6 +279,33 @@ def test_pair_cosine_map_divide_by_zero_parity(spark):
         ).collect()
 
 
+def test_adc_scored_kernel_divide_by_zero_parity(spark):
+    """Positive norms whose product underflows to 0 (1e-180 * 1e-150):
+    the expression's Divide raises DIVIDE_BY_ZERO under ANSI, and the
+    ADC kernel raises the same instead of emitting NaN."""
+    import pytest as _pt
+
+    from data_pipeline_spark_iceberg_dbt_airflow_spark.operators.pq import (
+        adc_scored,
+        adc_scored_kernel,
+    )
+
+    books = {s: {0: [1e-150, 0.0], 1: [0.0, 1e-150]} for s in range(2)}
+    coded = spark.createDataFrame(
+        [(1, [0, 1]), (2, [1, 1])], "id_b bigint, codes array<int>"
+    )
+    q_emb = [1e-180, 0.0, 0.0, 0.0]
+    queries = spark.createDataFrame(
+        [(0, q_emb, 1e-180)], "id_a bigint, q_emb array<double>, q_nrm double"
+    )
+    with _pt.raises(Exception, match="DIVIDE_BY_ZERO"):
+        adc_scored(
+            coded, queries, books, F.col("id_b") != F.col("id_a")
+        ).collect()
+    with _pt.raises(Exception, match="DIVIDE_BY_ZERO"):
+        adc_scored_kernel(coded, [(0, q_emb, 1e-180)], books).collect()
+
+
 def _pq_books(spark, sf_dir):
     emb_n = _emb_n(_real(spark, sf_dir))
     nanfree = emb_n.where(

@@ -123,6 +123,69 @@ def test_batch_all_fail_aborts(spark):
     assert extract_batch(spark, standard_sources(f), now=T0) is None
 
 
+def _row_lift(spark, sources, now):
+    """The row-tuple lift, ``createDataFrame(rows, BITCOIN_SCHEMA)``:
+    the differential reference for ``extract_batch``'s Arrow lift."""
+    rows = []
+    for s in sources:
+        try:
+            rec = s.parse(s.fetch())
+        except Exception:
+            continue
+        rec["extracted_at"] = now
+        rows.append(tuple(rec.get(f.name) for f in BITCOIN_SCHEMA.fields))
+    return spark.createDataFrame(rows, BITCOIN_SCHEMA)
+
+
+@pytest.mark.parametrize(
+    "now",
+    [T0, dt.datetime(2024, 3, 1, 12, 0, 0, 250, tzinfo=dt.timezone.utc)],
+    ids=["naive", "aware_utc"],
+)
+def test_arrow_lift_matches_row_lift(spark, now):
+    """The Arrow lift gives the row path's rows -- ``extracted_at`` the
+    same instant for naive and aware ``now``, blockchain_info NULL
+    padded -- in one partition."""
+    from pyspark.sql.types import TimestampType
+
+    sources = standard_sources(_fetchers()) * 4 + standard_sources(
+        _fetchers(coincap=RuntimeError("down"))
+    )
+    old = _row_lift(spark, sources, now)
+    new = extract_batch(spark, sources, now=now)
+    assert new.schema == old.schema == BITCOIN_SCHEMA
+    assert new.rdd.getNumPartitions() == 1
+
+    def canon(df):
+        return sorted(
+            (
+                (tuple(r)[:-1], TimestampType().toInternal(r.extracted_at))
+                for r in df.collect()
+            ),
+            key=repr,
+        )
+
+    got = canon(new)
+    assert got == canon(old)
+    assert len(got) == 14
+    assert {us for _, us in got} == {TimestampType().toInternal(now)}
+    padded = [r for r, _ in got if r[0] == "blockchain_info"]
+    assert len(padded) == 5
+    assert all(r[5:8] == (None, None, None) for r in padded)
+
+
+@pytest.mark.parametrize("usd", ["61000.5", 61000], ids=["str", "int"])
+def test_arrow_lift_rejects_what_the_row_lift_rejects(spark, usd):
+    """A value the StructType path rejects in a double field raises on
+    the Arrow path too, never silently coerced."""
+    gecko = {"bitcoin": dict(GECKO_OK["bitcoin"], usd=usd)}
+    sources = standard_sources(_fetchers(gecko=gecko))
+    with pytest.raises(TypeError):
+        _row_lift(spark, sources, T0)
+    with pytest.raises(TypeError, match="price_usd"):
+        extract_batch(spark, sources, now=T0)
+
+
 # --- D2/D5 runner + end-to-end oracle --------------------------------------
 
 

@@ -291,6 +291,55 @@ def test_incremental_target_commit_faults(spark, tmp_path, monkeypatch):
     assert len(os.listdir(os.path.join(tgt, "data"))) == 2
 
 
+def test_incremental_warm_run_is_one_spark_job(spark, tmp_path):
+    """A warm run takes its high-watermark from the target's manifest
+    and reads the target under the recorded schema, so the only Spark
+    job it runs is the delta's write. The watermark equals
+    ``agg(max)`` over the target, and the run appends exactly the
+    rows past it."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    from data_pipeline_spark_iceberg_dbt_airflow_spark.plans.incremental import (
+        incremental_append,
+    )
+    from data_pipeline_spark_iceberg_dbt_airflow_spark.snapshots import (
+        snapshot_summary,
+    )
+
+    from .test_snapshots import _jobs
+
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [(i, t0 + dt.timedelta(hours=i)) for i in range(9)]
+    mk = lambda rs: spark.createDataFrame(rs, "id bigint, ts timestamp")
+    tgt = str(tmp_path / "stg")
+    for n in (3, 6):
+        out = incremental_append(spark, mk(rows[:n]), tgt, watermark_col="ts")
+    hw = snapshot_summary(tgt)["stats"]["ts"][1]
+    assert hw == out.agg(F.max("ts")).first()[0] == rows[5][1]
+    out, jobs = _jobs(
+        spark,
+        lambda: incremental_append(spark, mk(rows), tgt, watermark_col="ts"),
+    )
+    assert jobs == 1
+    assert sorted(r.id for r in out.collect()) == list(range(9))
+
+
+def test_incremental_watermark_without_stats_raises(spark, tmp_path):
+    """A watermark column of a type the manifest keeps no max for (a
+    string) raises a clear TypeError on the first warm run."""
+    from data_pipeline_spark_iceberg_dbt_airflow_spark.plans.incremental import (
+        incremental_append,
+    )
+
+    src = spark.createDataFrame([(1, "a")], "id bigint, tag string")
+    tgt = str(tmp_path / "stg")
+    incremental_append(spark, src, tgt, watermark_col="tag")
+    with pytest.raises(TypeError, match="'tag'.*date or timestamp"):
+        incremental_append(spark, src, tgt, watermark_col="tag")
+
+
 def test_incremental_lookback_recovers_late_rows_once(spark, tmp_path):
     """A row arriving LATE (ts at the watermark boundary's past) is lost
     by the plain watermark predicate -- dbt's documented caveat -- and

@@ -126,18 +126,208 @@ def test_rollback_is_a_new_commit(spark, table):
         snapshot_rollback(table, 44)
 
 
+def _jobs(spark, fn):
+    """``fn()`` and the Spark jobs it ran, counted by job group as
+    ``perfbench/harness.JobAccount`` counts them."""
+    import uuid
+
+    sc = spark.sparkContext
+    gid = f"test-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, "counted")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def _live_dirs(table):
+    import data_pipeline_spark_iceberg_dbt_airflow_spark.snapshots as snap
+
+    return snap._live_paths(table, snap._load_manifests(table)[-1])
+
+
+def _same_as_inferred(got, inferred):
+    assert got.schema == inferred.schema
+    key = lambda r: str(r)  # noqa: E731
+    assert sorted(got.collect(), key=key) == sorted(inferred.collect(), key=key)
+
+
+def test_read_plans_from_the_manifest_without_jobs(spark, table):
+    """A read passes the schema its manifest recorded: planning runs no
+    Spark job, and columns, types (nested nullability and field
+    metadata included) and rows equal what footer inference gives."""
+    import datetime as dt
+    from decimal import Decimal
+
+    from pyspark.sql.types import (
+        ArrayType,
+        DateType,
+        DecimalType,
+        IntegerType,
+        LongType,
+        MapType,
+        StringType,
+        StructField,
+        StructType,
+        TimestampNTZType,
+    )
+
+    def schema(strict):
+        nullable = not strict
+        return StructType(
+            [
+                StructField("id", LongType(), nullable, {"comment": "key"}),
+                StructField("d", DateType()),
+                StructField("ntz", TimestampNTZType()),
+                StructField("amt", DecimalType(12, 3)),
+                StructField("tags", ArrayType(StringType(), nullable)),
+                StructField(
+                    "attrs", MapType(StringType(), IntegerType(), nullable)
+                ),
+                StructField(
+                    "pt",
+                    StructType([StructField("x", IntegerType(), nullable)]),
+                    nullable,
+                ),
+            ]
+        )
+
+    # commits alternate NOT NULL and nullable spellings of one schema:
+    # Parquet stores both as nullable, so the log holds one schema
+    for i in range(3):
+        snapshot_append(
+            spark.createDataFrame(
+                [
+                    (
+                        i,
+                        dt.date(2024, 1, 1 + i),
+                        dt.datetime(2024, 1, 1, i),
+                        Decimal("1.250"),
+                        ["a", "b"],
+                        {"k": i},
+                        (i,),
+                    )
+                ],
+                schema(strict=i % 2 == 0),
+            ),
+            table,
+        )
+    from data_pipeline_spark_iceberg_dbt_airflow_spark.snapshots import (
+        snapshot_summary,
+    )
+
+    assert len(snapshot_summary(table)["schemas"]) == 1
+    assert set(snapshot_summary(table)["stats"]) == {"id", "d", "ntz"}
+    dirs = _live_dirs(table)
+    got, jobs = _jobs(spark, lambda: snapshot_read(spark, table))
+    assert jobs == 0
+    _same_as_inferred(got, spark.read.parquet(*dirs))
+    got, jobs = _jobs(
+        spark, lambda: snapshot_read(spark, table, merge_schema=True)
+    )
+    assert jobs == 0
+    _same_as_inferred(got, spark.read.option("mergeSchema", "true").parquet(*dirs))
+
+
 def test_schema_evolution_across_appends(spark, table):
     """Appends may add columns; merge_schema=True reads the union with
     NULLs for pre-evolution directories, and historical versions still
-    read with their own schema."""
+    read with their own schema. Both reads plan from the manifest with
+    no Spark job. The union equals Spark's ``mergeSchema`` inference;
+    the plain read takes the oldest live schema, where inference would
+    take the schema of whichever uuid-named directory sorts first."""
     snapshot_append(_df(spark, [1]), table)
     evolved = spark.createDataFrame([(2, "r2", 7.5)], "id long, v string, score double")
     snapshot_append(evolved, table)
-    out = snapshot_read(spark, table, merge_schema=True)
+    out, jobs = _jobs(
+        spark, lambda: snapshot_read(spark, table, merge_schema=True)
+    )
+    assert jobs == 0
     assert set(out.columns) == {"id", "v", "score"}
     rows = {r["id"]: r["score"] for r in out.collect()}
     assert rows == {1: None, 2: 7.5}
+    dirs = _live_dirs(table)
+    _same_as_inferred(out, spark.read.option("mergeSchema", "true").parquet(*dirs))
+    plain, jobs = _jobs(spark, lambda: snapshot_read(spark, table))
+    assert jobs == 0
+    assert plain.columns == ["id", "v"]
+    assert sorted(plain.collect()) == [(1, "r1"), (2, "r2")]
     assert set(snapshot_read(spark, table, version=0).columns) == {"id", "v"}
+    from data_pipeline_spark_iceberg_dbt_airflow_spark.snapshots import (
+        snapshot_summary,
+    )
+
+    stats = snapshot_summary(table)["stats"]
+    assert stats == {"id": (1, 2), "score": (7.5, 7.5)}
+
+
+def test_manifest_summary_matches_aggregates(spark, table):
+    """Every version's manifest summary equals what Spark aggregates over
+    that version's read: row count, and min and max (so the incremental
+    high-watermark) of every integer, floating-point, date and
+    timestamp column -- through empty commits (NULL stats), appends, a
+    NaN (Spark ranks it above every double), overwrite, rollback and
+    merge. String columns record no stats."""
+    import datetime as dt
+    import math
+
+    from pyspark.sql import functions as F
+
+    from data_pipeline_spark_iceberg_dbt_airflow_spark.snapshots import (
+        snapshot_merge,
+        snapshot_rollback,
+        snapshot_summary,
+    )
+
+    t0 = dt.datetime(2024, 1, 1)
+
+    def mk(rows):
+        return spark.createDataFrame(
+            rows, "id long, ts timestamp, d date, x double, n int, v string"
+        )
+
+    def row(i, x):
+        return (
+            i,
+            t0 + dt.timedelta(hours=i, microseconds=i),
+            (t0 + dt.timedelta(days=i)).date(),
+            x,
+            i % 3,
+            f"r{i}",
+        )
+
+    snapshot_append(mk([]), table)  # v0: empty, NULL stats
+    snapshot_append(mk([row(1, 1.5), row(2, -2.0)]), table)  # v1
+    snapshot_append(mk([row(5, 0.0)]).where("id > 9"), table)  # v2: empty
+    snapshot_append(mk([row(3, float("nan"))]), table)  # v3
+    snapshot_overwrite(mk([row(7, 0.25)]), table)  # v4
+    snapshot_rollback(table, 3)  # v5
+    snapshot_merge(mk([row(2, 9.0), row(8, None)]), table, "id")  # v6
+
+    def same(a, b):
+        return a == b or (
+            isinstance(a, float) and isinstance(b, float)
+            and math.isnan(a) and math.isnan(b)
+        )
+
+    cols = ["id", "ts", "d", "x", "n"]
+    for v in range(7):
+        summary = snapshot_summary(table, version=v)
+        agg = snapshot_read(spark, table, version=v).agg(
+            F.count(F.lit(1)),
+            *[f(c) for c in cols for f in (F.min, F.max)],
+        ).first()
+        assert summary["rows"] == agg[0], v
+        assert list(summary["stats"]) == cols, v
+        for i, c in enumerate(cols):
+            lo, hi = summary["stats"][c]
+            assert same(lo, agg[1 + 2 * i]) and same(hi, agg[2 + 2 * i]), (
+                v, c, summary["stats"][c], agg,
+            )
+    assert snapshot_summary(table, version=0)["stats"]["ts"] == (None, None)
+    assert math.isnan(snapshot_summary(table, version=3)["stats"]["x"][1])
 
 
 def test_vacuum_sweeps_orphans_and_expired_history(spark, table):
@@ -707,13 +897,18 @@ def _run_model_sequence(
         return
     got = sorted(r["id"] for r in snapshot_read(spark, table).collect())
     assert got == history[-1]
-    meta = {r["version"] for r in snapshot_versions(spark, table).collect()}
-    assert meta == set(live_versions)
+    meta = {
+        r["version"]: r["rows"]
+        for r in snapshot_versions(spark, table).collect()
+    }
+    assert set(meta) == set(live_versions)
     for v in live_versions:
         got_v = sorted(
             r["id"] for r in snapshot_read(spark, table, version=v).collect()
         )
         assert got_v == history[v], (v, ops)
+        # the manifest's row count (no data read) matches the content
+        assert meta[v] == len(history[v]), (v, ops)
 
 
 def test_cdc_stream_applies_upserts_and_deletes(spark, tmp_path):
