@@ -17,6 +17,7 @@ it belongs at cluster scale.
 
 from __future__ import annotations
 
+import contextlib
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -145,38 +146,30 @@ class PipelineRunner:
         names = targets if targets is not None else list(self._models)
         todo = [t for t in names if t not in results]
         order = self._toposort(todo, satisfied=set(results))
-        if bucket_key is None:
+        layout = contextlib.nullcontext()
+        if bucket_key is not None:
+            from pyspark.sql import SparkSession
+
+            from ..operators.layout import bucketed_sorted_reader, write_bucketed
+
+            spark = SparkSession.getActiveSession()
+            if spark is None:
+                raise RuntimeError("bucket_key requires an active SparkSession")
+            layout = bucketed_sorted_reader(spark)
+
+        def build(m: Model) -> DataFrame:
+            out = m.fn(*[results[r] for r in m.refs])
+            if bucket_key is not None and bucket_key in out.columns:
+                tbl = f"{table_prefix}_{m.name}"
+                write_bucketed(out, tbl, bucket_key, bucket_count, sort=True)
+                return spark.table(tbl)
+            if materialize or bucket_key is not None:
+                return out.localCheckpoint(eager=True)
+            return out
+
+        with layout:
             for n in order:
-                if n in results:
-                    continue
-                m = self._models[n]
-                out = self._attempt(m, [results[r] for r in m.refs])
-                if materialize:
-                    out = out.localCheckpoint(eager=True)
-                results[n] = out
-            return results
-
-        from pyspark.sql import SparkSession
-
-        from ..operators.layout import bucketed_sorted_reader, write_bucketed
-
-        spark = SparkSession.getActiveSession()
-        if spark is None:
-            raise RuntimeError("bucket_key requires an active SparkSession")
-        with bucketed_sorted_reader(spark):
-            for n in order:
-                if n in results:
-                    continue
-                m = self._models[n]
-                out = self._attempt(m, [results[r] for r in m.refs])
-                if bucket_key in out.columns:
-                    tbl = f"{table_prefix}_{n}"
-                    write_bucketed(
-                        out, tbl, bucket_key, bucket_count, sort=True
-                    )
-                    results[n] = spark.table(tbl)
-                else:
-                    results[n] = out.localCheckpoint(eager=True)
+                results[n] = self._attempt(self._models[n], build)
         return results
 
     def manifest(
@@ -228,12 +221,17 @@ class PipelineRunner:
             ),
         }
 
-    def _attempt(self, m: Model, inputs: list[DataFrame]) -> DataFrame:
-        """Execute one model with the configured retry policy (D4)."""
+    def _attempt(
+        self, m: Model, build: Callable[[Model], DataFrame]
+    ) -> DataFrame:
+        """Run one model with the configured retry policy (D4). One
+        attempt is the whole of ``build``: the model's transform and its
+        materialization, so a failure while the frame executes is
+        retried like one while it is built."""
         last: Exception | None = None
         for _ in range(self.config.retries + 1):
             try:
-                return m.fn(*inputs)
+                return build(m)
             except Exception as e:  # noqa: BLE001 - policy boundary
                 last = e
         raise RuntimeError(

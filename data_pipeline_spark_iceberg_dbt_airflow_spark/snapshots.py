@@ -49,22 +49,30 @@ format design (the mechanism Iceberg/Delta themselves use):
   that cliff only after 32 appends; compaction is what keeps an aging table under it. Time
   travel by timestamp picks the newest manifest committed at or before
   the requested instant.
+- Every manifest is a FULL state: it names every live directory and
+  carries the whole snapshot summary, never a delta against its
+  parent. One manifest therefore defines its snapshot alone, and each
+  operation parses only the manifest it needs (Iceberg's reader loads
+  only the current metadata file for the same reason): a latest read
+  or a commit parses the newest ``v<N>.json``, ``version=k`` parses
+  ``v<k>.json``, and ``as_of_ns`` bisects over the versions, which is
+  sound because ``_next_ts`` keeps commit times monotone in version.
+  No log replay and so no checkpoint fold (Delta needs one because
+  its commits record incremental actions). Only the ``.snapshots``
+  metadata scan and vacuum parse every surviving manifest, and
+  ``snapshot_vacuum(keep_versions=)`` is what bounds the log.
 
 Scale shape: manifests are driver-side metadata (KBs; one tiny JSON
 per commit -- the same driver-coordinated commit every table format
-performs); data moves only through executor parquet writes. Every
-``CHECKPOINT_EVERY`` commits the log folds into a compacted
-checkpoint (Delta's ``_last_checkpoint`` idea), so loads parse ONE
-checkpoint + the manifest tail instead of O(commits) files -- the
-long-lived-CDC-table hot path; vacuum refolds after expiring history
-so a checkpoint can never resurrect an expired snapshot. Not provided
-(use the real Iceberg runtime in production):
-file-level delete vectors, hidden partition transforms, and
-multi-table transactions.
+performs); data moves only through executor parquet writes. Not
+provided (use the real Iceberg runtime in production): file-level
+delete vectors, hidden partition transforms, and multi-table
+transactions.
 """
 
 from __future__ import annotations
 
+import bisect
 import json
 import os
 import time
@@ -91,15 +99,6 @@ from pyspark.sql.types import (
 )
 
 
-#: Fold the log into a compacted checkpoint file every this many
-#: commits (Delta's _last_checkpoint idea): loads then parse ONE
-#: checkpoint + the tail of newer manifests instead of every manifest
-#: ever committed -- a long-lived CDC table commits once per
-#: micro-batch, so an O(commits) load would grow linearly with table
-#: age on the hottest path.
-CHECKPOINT_EVERY = 20
-
-
 #: Column types whose min and max every commit records: fixed-width and
 #: orderable, so the internal form (``DataType.toInternal``) of a value
 #: is one JSON number.
@@ -124,125 +123,28 @@ def _manifest_path(table_dir: str, version: int) -> str:
     return os.path.join(_manifest_dir(table_dir), f"v{version:08d}.json")
 
 
-def _checkpoint_path(table_dir: str, version: int) -> str:
-    return os.path.join(_manifest_dir(table_dir), f"c{version:08d}.json")
-
-
-def _norm_dirs(m: dict) -> dict:
-    # Legacy manifests (pre-basename format) stored full or relative
-    # dir PATHS; normalize to basenames on load so reads resolve
-    # correctly and vacuum's liveness set can never
-    # string-compare-miss a live dir and delete it.
-    m["dirs"] = [os.path.basename(d.rstrip("/")) for d in m["dirs"]]
-    return m
-
-
-def _load_manifests(table_dir: str) -> list[dict]:
-    """All manifests, version-ascending, parsing O(tail): the newest
-    readable checkpoint supplies every manifest at or below its
-    version in one JSON parse; only newer v<N>.json files are parsed
-    individually. A torn/corrupt checkpoint falls back to the next
-    older one, then to a full parse -- checkpoints are an index, never
-    the source of truth. (The directory listing itself stays
-    O(commits) names until a vacuum expires history; names are cheap,
-    parses were the cost.)"""
+def _versions(table_dir: str) -> list[int]:
+    """The published versions, ascending, from one listing of the log."""
     mdir = _manifest_dir(table_dir)
     if not os.path.isdir(mdir):
         return []
-    names = os.listdir(mdir)
-    base: list[dict] = []
-    base_version = -1
-    for cname in sorted(
-        (n for n in names if n.startswith("c") and n.endswith(".json")),
-        reverse=True,
-    ):
-        try:
-            with open(os.path.join(mdir, cname)) as f:
-                cp = json.load(f)
-            base = [_norm_dirs(dict(m)) for m in cp["manifests"]]
-            base_version = int(cp["version"])
-            break
-        except (OSError, ValueError, KeyError):
-            base, base_version = [], -1
-    out = list(base)
-    for name in sorted(names):
-        if not (name.startswith("v") and name.endswith(".json")):
-            continue
-        try:
-            file_version = int(name[1:-5])
-        except ValueError:
-            file_version = None  # unexpected spelling: parse and check
-        if file_version is not None and file_version <= base_version:
-            continue  # already folded into the checkpoint
-        with open(os.path.join(mdir, name)) as f:
-            m = json.load(f)
-        if m["version"] <= base_version:
-            continue
-        out.append(_norm_dirs(m))
-    return out
+    return sorted(
+        int(n[1:-5])
+        for n in os.listdir(mdir)
+        if n.startswith("v") and n.endswith(".json") and n[1:-5].isdigit()
+    )
 
 
-def _write_checkpoint(
-    table_dir: str, version: int, manifests: list[dict] | None = None
-) -> bool:
-    """Fold every manifest at or below ``version`` into c<version>.json
-    (atomic tmp + replace; the .tmp- prefix keeps crash leftovers
-    inside the vacuum sweep). Best-effort by contract: the commit that
-    triggered it is already durable, so a failed checkpoint write must
-    never fail the commit -- the next multiple just tries again. Keeps
-    the previous checkpoint as a fallback for a corrupt newest; older
-    ones are swept. Returns True iff the fold durably replaced
-    c<version>.json -- vacuum's expiry rebuild keys its stale-checkpoint
-    sweep exemption on this (a swallowed failure there must NOT leave a
-    same-named pre-existing checkpoint in place, since that stale file
-    folds just-expired manifests and would resurrect them on reload).
+def _manifest(table_dir: str, version: int) -> dict:
+    """Parse one manifest; a torn or corrupt file raises ``ValueError``."""
+    with open(_manifest_path(table_dir, version)) as f:
+        return json.load(f)
 
-    ``manifests`` lets a caller that already HOLDS the authoritative
-    list (vacuum's expiry rebuild, which deletes every checkpoint
-    before refolding) bypass the on-disk reload: after a prune_folded
-    pass the v-files alone no longer spell the full history, so a
-    checkpoint-less reload there would silently forget pruned-but-live
-    versions."""
-    if manifests is None:
-        manifests = [
-            m for m in _load_manifests(table_dir) if m["version"] <= version
-        ]
-    else:
-        manifests = [m for m in manifests if m["version"] <= version]
-    mdir = _manifest_dir(table_dir)
-    tmp = os.path.join(mdir, f".tmp-{uuid.uuid4().hex}")
-    try:
-        with open(tmp, "w") as f:
-            json.dump({"version": version, "manifests": manifests}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, _checkpoint_path(table_dir, version))
-    except (OSError, ValueError, KeyError):
-        # ValueError/KeyError: _load_manifests hit a corrupt or
-        # schema-less v-file while folding -- the triggering commit is
-        # already durably linked, so checkpointing must swallow it too
-        # (the checkpoint is an index, never the source of truth)
-        try:
-            os.remove(tmp)
-        except FileNotFoundError:
-            pass
-        return False
-    # c<version>.json is durable from here: True no matter what the
-    # sweep of superseded checkpoints does below. Returning False for
-    # a failed sweep made vacuum's degraded path delete the GOOD
-    # checkpoint it had just written (and skip its reload), durably
-    # forgetting pruned-folded survivor versions.
-    try:
-        cpoints = sorted(
-            n
-            for n in os.listdir(mdir)
-            if n.startswith("c") and n.endswith(".json")
-        )
-        for name in cpoints[:-2]:
-            os.remove(os.path.join(mdir, name))
-    except OSError:
-        pass  # stale checkpoints are re-swept by the next fold
-    return True
+
+def _latest(table_dir: str) -> dict | None:
+    """The newest manifest, or None before the first commit."""
+    versions = _versions(table_dir)
+    return _manifest(table_dir, versions[-1]) if versions else None
 
 
 def _live_paths(table_dir: str, manifest: dict) -> list[str]:
@@ -279,10 +181,6 @@ def _publish(table_dir: str, version: int, manifest: dict) -> bool:
             os.fsync(f.fileno())
         try:
             os.link(tmp, _manifest_path(table_dir, version))
-            if version > 0 and version % CHECKPOINT_EVERY == 0:
-                # only the unique winner of version N reaches this, so
-                # c<N>.json has exactly one writer
-                _write_checkpoint(table_dir, version)
             return True
         except FileExistsError:
             return False
@@ -299,13 +197,13 @@ def _publish(table_dir: str, version: int, manifest: dict) -> bool:
     )
 
 
-def _next_ts(manifests: list[dict]) -> int:
+def _next_ts(parent: dict | None) -> int:
     """Commit timestamp, clamped MONOTONE over the parent's: a wall
     clock stepped backwards (NTP) must not let as-of-timestamp reads
     pick a snapshot whose content postdates the requested instant --
     the same invariant Delta/Iceberg enforce."""
     now = time.time_ns()
-    return max(now, manifests[-1]["committed_at_ns"] + 1) if manifests else now
+    return max(now, parent["committed_at_ns"] + 1) if parent else now
 
 
 class SnapshotConflictError(RuntimeError):
@@ -446,25 +344,25 @@ def _commit(
     observed.write.mode("overwrite").parquet(os.path.join(data_root, new_name))
     summary = _summary(df, obs, fields)
     while True:
-        manifests = _load_manifests(table_dir)
-        version = manifests[-1]["version"] + 1 if manifests else 0
+        parent = _latest(table_dir)
+        version = parent["version"] + 1 if parent else 0
         if expected_parent is not None and version != expected_parent + 1:
             raise SnapshotConflictError(
                 f"table at {table_dir} advanced to v{version - 1} while "
                 f"a {operation} was computed against v{expected_parent}; "
                 "re-run the operation against the current snapshot"
             )
-        if operation == "append" and manifests:
-            dirs = manifests[-1]["dirs"] + [new_name]
-            live = _append_summary(_summary_of(manifests[-1]), summary)
+        if operation == "append" and parent:
+            dirs = parent["dirs"] + [new_name]
+            live = _append_summary(_summary_of(parent), summary)
         else:
             dirs = [new_name]
             live = summary
         manifest = {
             "version": version,
-            "parent": manifests[-1]["version"] if manifests else None,
+            "parent": parent["version"] if parent else None,
             "operation": operation,
-            "committed_at_ns": _next_ts(manifests),
+            "committed_at_ns": _next_ts(parent),
             "dirs": dirs,
             **live,
         }
@@ -491,18 +389,15 @@ def snapshot_rollback(table_dir: str, version: int) -> int:
     operation='rollback' republishes the old snapshot's directory list,
     so the bad snapshots stay inspectable and the rollback itself is
     time-travelable."""
-    manifests = _load_manifests(table_dir)
-    target = next((m for m in manifests if m["version"] == version), None)
-    if target is None:
-        raise ValueError(f"no snapshot version {version} at {table_dir}")
+    target = _pick(table_dir, version, None)
     while True:
-        manifests = _load_manifests(table_dir)
-        new_version = manifests[-1]["version"] + 1
+        parent = _latest(table_dir)
+        new_version = parent["version"] + 1
         manifest = {
             "version": new_version,
-            "parent": manifests[-1]["version"],
+            "parent": parent["version"],
             "operation": "rollback",
-            "committed_at_ns": _next_ts(manifests),
+            "committed_at_ns": _next_ts(parent),
             "dirs": target["dirs"],
             **_summary_of(target),
         }
@@ -514,7 +409,6 @@ def snapshot_vacuum(
     table_dir: str,
     keep_versions: int | None = None,
     tmp_grace_s: float = 3600.0,
-    prune_folded: bool = False,
 ) -> list[str]:
     """Delete data directories no manifest references (orphans from
     lost commit races) and, when ``keep_versions`` is given, expire all
@@ -527,22 +421,15 @@ def snapshot_vacuum(
     never see them, so the sweep is safe whenever no commit is
     IN FLIGHT -- run it from the single maintenance owner, exactly like
     Iceberg's expire_snapshots/remove_orphan_files pair. History that
-    survives ``keep_versions`` remains fully time-travelable.
+    survives ``keep_versions`` remains fully time-travelable, and
+    expiry is what bounds the manifest listing of a long-lived table.
 
-    ``prune_folded=True`` additionally deletes v-manifest files already
-    folded into the SECOND-newest checkpoint: ``_load_manifests``
-    parses O(tail), but the directory LISTING stays O(commits) names
-    until the folded files go -- on a long-lived CDC table (one commit
-    per micro-batch) the listing itself becomes the hot-path cost.
-    The bound is the second-newest checkpoint, not the newest, so the
-    corrupt-newest fallback keeps working: a torn ``c<N>`` degrades to
-    the older checkpoint plus the still-present v-files above it, and
-    every folded version stays time-travelable through the checkpoint.
-    The trade, stated honestly: after a prune the checkpoints ARE the
-    durable spelling of folded history -- losing BOTH retained
-    checkpoints at once (the full-parse fallback) would forget the
-    pruned versions. Iceberg/Delta make the same call when expiring
-    metadata behind their checkpoint files.
+    Liveness comes from every SURVIVING manifest, parsed before
+    anything is deleted: one that cannot be parsed raises and nothing
+    is swept. Expiry removes the oldest manifests first, so an expiry
+    interrupted by a failed remove raises with a contiguous tail of
+    versions left, every one a full state and readable; re-run vacuum
+    to finish it.
     """
     import shutil
 
@@ -550,73 +437,16 @@ def snapshot_vacuum(
         # keep_versions=0 would expire EVERY manifest (current snapshot
         # included) and the sweep would then delete the whole table
         raise ValueError("keep_versions must be >= 1")
-    manifests = _load_manifests(table_dir)
-    if keep_versions is not None and len(manifests) > keep_versions:
-        for m in manifests[: len(manifests) - keep_versions]:
-            try:
-                os.remove(_manifest_path(table_dir, m["version"]))
-            except FileNotFoundError:
-                pass  # folded into a checkpoint; no standalone file
-        manifests = manifests[len(manifests) - keep_versions :]
-        # checkpoints FOLD the expired manifests; left in place they
-        # would resurrect them on the next load (and their data dirs
-        # are about to be swept). Rebuild under the vacuum's exclusive
-        # no-commit-in-flight contract: drop every checkpoint, then
-        # re-fold the surviving history.
-        # Refold from the in-memory survivors, NOT a reload (after a
-        # prune_folded pass the v-files alone no longer spell versions
-        # the expiry kept), and write the NEW checkpoint BEFORE removing
-        # the stale ones -- no window with zero checkpoints on disk. If
-        # the write failed, a checkpoint-less log must still spell
-        # EVERY survivor: re-materialize the v-files prune_folded
-        # removed before sweeping any checkpoint, and if even that
-        # fails, abort the expiry with checkpoints intact -- the
-        # expired versions resurrect on the next load (a no-op expiry
-        # the caller can retry), which beats durably forgetting
-        # survivors whose data dirs the sweep below would then orphan
-        # and delete. Sweeping ALL checkpoints in the failure path
-        # (not exempting keep_name) stays required: a pre-existing
-        # c<keep_ver> from a regular CHECKPOINT_EVERY fold spells the
-        # same name but folds the just-expired manifests.
-        keep_ver = int(manifests[-1]["version"])
-        wrote = _write_checkpoint(table_dir, keep_ver, manifests=manifests)
-        keep_name = f"c{keep_ver:08d}.json" if wrote else None
-        if not wrote:
-            try:
-                for m in manifests:
-                    vpath = _manifest_path(table_dir, m["version"])
-                    if os.path.exists(vpath):
-                        continue
-                    tmp = os.path.join(
-                        _manifest_dir(table_dir),
-                        f".tmp-{uuid.uuid4().hex}",
-                    )
-                    with open(tmp, "w") as f:
-                        json.dump(m, f)
-                        f.flush()
-                        os.fsync(f.fileno())
-                    os.replace(tmp, vpath)
-            except OSError as ex:
-                raise RuntimeError(
-                    "snapshot_vacuum could not rebuild the log after a "
-                    "failed checkpoint write; expiry aborted with "
-                    "checkpoints (and all history) intact -- re-run "
-                    "vacuum once the store accepts writes"
-                ) from ex
-        cdir = _manifest_dir(table_dir)
-        if os.path.isdir(cdir):
-            for name in sorted(os.listdir(cdir)):
-                if (
-                    name.startswith("c")
-                    and name.endswith(".json")
-                    and name != keep_name
-                ):
-                    os.remove(os.path.join(cdir, name))
-        if wrote:
-            manifests = _load_manifests(table_dir)
+    versions = _versions(table_dir)
+    expired = versions[:-keep_versions] if keep_versions is not None else []
+    survivors = [_manifest(table_dir, v) for v in versions[len(expired) :]]
+    for v in expired:
+        os.remove(_manifest_path(table_dir, v))
     # liveness compares BASENAMES (what manifests store), immune to
-    # table_dir spelling differences
-    live = {d for m in manifests for d in m["dirs"]}
+    # table_dir spelling differences; a path stored by the pre-basename
+    # format compares by its basename too, so it can never make vacuum
+    # delete the live directory it names
+    live = {os.path.basename(d.rstrip("/")) for m in survivors for d in m["dirs"]}
     data_root = os.path.join(table_dir, "data")
     removed = []
     if os.path.isdir(data_root):
@@ -645,31 +475,6 @@ def snapshot_vacuum(
                         removed.append(path)
                 except FileNotFoundError:
                     pass  # the owning writer's finally beat us to it
-    if prune_folded and os.path.isdir(mdir):
-        # v-files at or below the SECOND-newest checkpoint are doubly
-        # folded (present in both retained checkpoints); deleting them
-        # bounds the listing at ~CHECKPOINT_EVERY + 2 names without
-        # weakening the corrupt-newest-checkpoint fallback. With fewer
-        # than two checkpoints there is no doubly-covered range: prune
-        # nothing (the full-parse fallback still needs every v-file).
-        cvers = sorted(
-            int(n[1:-5])
-            for n in os.listdir(mdir)
-            if n.startswith("c") and n.endswith(".json") and n[1:-5].isdigit()
-        )
-        if len(cvers) >= 2:
-            bound = cvers[-2]
-            for name in sorted(os.listdir(mdir)):
-                if not (name.startswith("v") and name.endswith(".json")):
-                    continue
-                try:
-                    ver = int(name[1:-5])
-                except ValueError:
-                    continue  # unexpected spelling: never prune it
-                if ver <= bound:
-                    path = os.path.join(mdir, name)
-                    os.remove(path)
-                    removed.append(path)
     return removed
 
 
@@ -681,12 +486,7 @@ def snapshot_exists(table_dir: str) -> bool:
     the directory present with zero manifests. A name check only (no
     JSON parse): per-micro-batch callers must not pay O(commits) log
     parsing for a bool."""
-    mdir = _manifest_dir(table_dir)
-    if not os.path.isdir(mdir):
-        return False
-    return any(
-        n.startswith("v") and n.endswith(".json") for n in os.listdir(mdir)
-    )
+    return bool(_versions(table_dir))
 
 
 def snapshot_versions(spark: SparkSession, table_dir: str) -> DataFrame:
@@ -694,6 +494,7 @@ def snapshot_versions(spark: SparkSession, table_dir: str) -> DataFrame:
     (version, parent, operation, committed_at, n_dirs, rows). ``rows``
     is the snapshot's total row count from its manifest summary
     (Iceberg's ``total-records``): no data file is read."""
+    manifests = [_manifest(table_dir, v) for v in _versions(table_dir)]
     rows = [
         (
             m["version"],
@@ -703,7 +504,7 @@ def snapshot_versions(spark: SparkSession, table_dir: str) -> DataFrame:
             len(m["dirs"]),
             m["rows"],
         )
-        for m in _load_manifests(table_dir)
+        for m in manifests
     ]
     return spark.createDataFrame(
         rows,
@@ -716,29 +517,33 @@ def _pick(
     table_dir: str, version: int | None, as_of_ns: int | None
 ) -> dict:
     """The manifest of the latest snapshot, an explicit ``version``, or
-    the newest one committed at or before ``as_of_ns``."""
-    manifests = _load_manifests(table_dir)
-    if not manifests:
-        raise ValueError(f"no snapshots at {table_dir}")
+    the newest one committed at or before ``as_of_ns``. Parses that one
+    manifest; ``as_of_ns`` bisects on commit times, which ``_next_ts``
+    keeps monotone in version, so it parses O(log versions)."""
     if version is not None and as_of_ns is not None:
         raise ValueError("pass version OR as_of_ns, not both")
     if version is not None:
-        picked = next(
-            (m for m in manifests if m["version"] == version), None
-        )
-        if picked is None:
-            raise ValueError(f"no snapshot version {version} at {table_dir}")
-        return picked
-    if as_of_ns is not None:
-        eligible = [
-            m for m in manifests if m["committed_at_ns"] <= as_of_ns
-        ]
-        if not eligible:
+        try:
+            return _manifest(table_dir, version)
+        except FileNotFoundError:
             raise ValueError(
-                f"no snapshot at or before {as_of_ns} at {table_dir}"
-            )
-        return eligible[-1]
-    return manifests[-1]
+                f"no snapshot version {version} at {table_dir}"
+            ) from None
+    versions = _versions(table_dir)
+    if not versions:
+        raise ValueError(f"no snapshots at {table_dir}")
+    if as_of_ns is None:
+        return _manifest(table_dir, versions[-1])
+    parsed: dict[int, dict] = {}
+
+    def committed_at(v: int) -> int:
+        parsed[v] = _manifest(table_dir, v)
+        return parsed[v]["committed_at_ns"]
+
+    i = bisect.bisect_right(versions, as_of_ns, key=committed_at)
+    if i == 0:
+        raise ValueError(f"no snapshot at or before {as_of_ns} at {table_dir}")
+    return parsed.get(versions[i - 1]) or _manifest(table_dir, versions[i - 1])
 
 
 def snapshot_summary(
@@ -867,10 +672,10 @@ def snapshot_merge(
             raise TypeError(
                 f"delete_col {delete_col} must be boolean, got {dtype}"
             )
-    manifests = _load_manifests(table_dir)
-    if not manifests:
+    versions = _versions(table_dir)
+    if not versions:
         raise ValueError(f"no snapshots at {table_dir}")
-    base_version = manifests[-1]["version"]
+    base_version = versions[-1]
     current = snapshot_read(
         spark, table_dir, version=base_version, merge_schema=True
     )

@@ -431,6 +431,36 @@ def test_runner_retry_policy(spark):
     assert calls["n"] == 2 and out["m"] is raw
 
 
+def test_runner_retry_covers_materialization(spark, tmp_path):
+    """One attempt is the model's build AND its materialization: a frame
+    that raises once while it executes (a UDF failing on the first pass,
+    keyed on a flag file) is absorbed by ``retries=1`` and fails the run
+    with the runner's error under ``retries=0``."""
+    from pyspark.sql import functions as F
+
+    from data_pipeline_spark_iceberg_dbt_airflow_spark.plans.runner import RunConfig
+
+    def runner(retries, flag):
+        @F.udf("long")
+        def fail_once(x):
+            import os
+
+            if not os.path.exists(flag):
+                open(flag, "w").close()
+                raise RuntimeError("transient executor fault")
+            return x
+
+        r = PipelineRunner(RunConfig(retries=retries))
+        r.add(Model("m", lambda src: src.select(fail_once("id")), ("src",)))
+        return r
+
+    seeds = {"src": spark.range(4)}
+    with pytest.raises(RuntimeError, match="'m' failed after 1 attempts"):
+        runner(0, str(tmp_path / "flag0")).run(seeds=seeds, materialize=True)
+    out = runner(1, str(tmp_path / "flag1")).run(seeds=seeds, materialize=True)
+    assert sorted(r[0] for r in out["m"].collect()) == [0, 1, 2, 3]
+
+
 def test_runner_target_selection(spark):
     """P6: the dbt ``--select`` analog -- running one target executes only
     its upstream closure."""

@@ -77,15 +77,15 @@ def test_commit_conflict_retries(spark, table, monkeypatch):
     with open(os.path.join(mdir, "v00000001.json"), "x") as f:
         json.dump(winner, f)
 
-    real = snap._load_manifests
+    real = snap._versions
     calls = {"n": 0}
 
     def stale_once(table_dir):
         calls["n"] += 1
-        m = real(table_dir)
-        return m[:-1] if calls["n"] == 1 else m  # hide the winner once
+        vs = real(table_dir)
+        return vs[:-1] if calls["n"] == 1 else vs  # hide the winner once
 
-    monkeypatch.setattr(snap, "_load_manifests", stale_once)
+    monkeypatch.setattr(snap, "_versions", stale_once)
     v = snapshot_append(_df(spark, [2]), table)
     assert v == 2
     assert calls["n"] >= 2  # the retry actually ran
@@ -145,7 +145,7 @@ def _jobs(spark, fn):
 def _live_dirs(table):
     import data_pipeline_spark_iceberg_dbt_airflow_spark.snapshots as snap
 
-    return snap._live_paths(table, snap._load_manifests(table)[-1])
+    return snap._live_paths(table, snap._latest(table))
 
 
 def _same_as_inferred(got, inferred):
@@ -652,30 +652,26 @@ def test_real_concurrent_appends_all_land(spark, table):
     assert snapshot_vacuum(table) == []
 
 
-# --- checkpointed log (round 6) --------------------------------------------
+# --- one manifest per operation --------------------------------------------
 
 
-@pytest.fixture()
-def small_checkpoints(monkeypatch):
-    """Shrink the checkpoint cadence so a dozen commits exercise it."""
+def test_each_operation_parses_one_manifest(spark, table, monkeypatch):
+    """Every manifest is a full state, so on a 13-commit table a latest
+    read, a ``version=`` read, ``snapshot_summary`` and an append commit
+    each parse exactly one manifest, and an ``as_of_ns`` read bisects
+    over commit times in at most 5 parses -- and each returns what the
+    whole log says."""
     import data_pipeline_spark_iceberg_dbt_airflow_spark.snapshots as snap
+    from data_pipeline_spark_iceberg_dbt_airflow_spark.snapshots import (
+        snapshot_summary,
+    )
 
-    monkeypatch.setattr(snap, "CHECKPOINT_EVERY", 5)
-    return 5
-
-
-def test_log_load_parses_o_tail(spark, table, small_checkpoints, monkeypatch):
-    """On a 13-commit table with checkpoints every 5, a load must parse
-    the newest checkpoint plus the tail -- 3 JSON parses, not 13."""
-    import data_pipeline_spark_iceberg_dbt_airflow_spark.snapshots as snap
-
-    for i in range(13):  # versions 0..12; checkpoints at v5 and v10
+    for i in range(13):  # versions 0..12
         snapshot_append(_df(spark, [i]), table)
-    names = sorted(os.listdir(os.path.join(table, "_snapshots")))
-    assert [n for n in names if n.startswith("c")] == [
-        "c00000005.json",
-        "c00000010.json",
-    ]
+    ts = {
+        r["version"]: r["committed_at_ns"]
+        for r in snapshot_versions(spark, table).collect()
+    }
     real_load = json.load
     calls = {"n": 0}
 
@@ -683,62 +679,49 @@ def test_log_load_parses_o_tail(spark, table, small_checkpoints, monkeypatch):
         calls["n"] += 1
         return real_load(f)
 
-    monkeypatch.setattr(snap.json, "load", counting_load)
-    manifests = snap._load_manifests(table)
-    assert [m["version"] for m in manifests] == list(range(13))
-    assert calls["n"] == 3, calls  # c10 + v11 + v12
-    monkeypatch.undo()
-    assert sorted(r["id"] for r in snapshot_read(spark, table).collect()) == list(
-        range(13)
-    )
-    # time travel through a checkpoint-folded version still works
-    assert sorted(
-        r["id"] for r in snapshot_read(spark, table, version=4).collect()
-    ) == [0, 1, 2, 3, 4]
+    def parses(fn):
+        monkeypatch.setattr(snap.json, "load", counting_load)
+        calls["n"] = 0
+        try:
+            out = fn()
+        finally:
+            monkeypatch.setattr(snap.json, "load", real_load)
+        return out, calls["n"]
+
+    def ids(df):
+        return sorted(r["id"] for r in df.collect())
+
+    latest, n = parses(lambda: snapshot_read(spark, table))
+    assert n == 1 and ids(latest) == list(range(13))
+    v4, n = parses(lambda: snapshot_read(spark, table, version=4))
+    assert n == 1 and ids(v4) == [0, 1, 2, 3, 4]
+    summary, n = parses(lambda: snapshot_summary(table))
+    assert n == 1 and summary["version"] == 12 and summary["rows"] == 13
+    for k in range(13):
+        at_k, n = parses(lambda: snapshot_read(spark, table, as_of_ns=ts[k]))
+        assert n <= 5 and ids(at_k) == list(range(k + 1)), (k, n)
+    version, n = parses(lambda: snapshot_append(_df(spark, [13]), table))
+    assert n == 1 and version == 13
+    assert ids(snapshot_read(spark, table)) == list(range(14))
 
 
-def test_corrupt_checkpoint_falls_back(spark, table, small_checkpoints):
-    """A torn/garbage newest checkpoint must degrade to the older one
-    (or a full parse), never brick the table."""
-    for i in range(11):  # checkpoints at v5, v10
-        snapshot_append(_df(spark, [i]), table)
-    with open(os.path.join(table, "_snapshots", "c00000010.json"), "w") as f:
-        f.write('{"version": 10, "manif')  # torn mid-write (impossible
-        # via os.replace; simulates external corruption)
-    assert sorted(r["id"] for r in snapshot_read(spark, table).collect()) == list(
-        range(11)
-    )
-    os.remove(os.path.join(table, "_snapshots", "c00000005.json"))
-    with open(os.path.join(table, "_snapshots", "c00000010.json"), "w") as f:
-        f.write("not json at all")
-    # both checkpoints unusable -> full parse of the v-files
-    assert sorted(r["id"] for r in snapshot_read(spark, table).collect()) == list(
-        range(11)
-    )
-
-
-def test_vacuum_rebuilds_checkpoints_on_expiry(spark, table, small_checkpoints):
-    """Expiring history must not let a checkpoint resurrect expired
-    manifests: vacuum refolds the surviving history, expired versions
-    are gone from the metadata scan, survivors still time-travel, and
-    the rebuilt log stays O(tail)."""
+def test_vacuum_expiry_keeps_survivors_travelable(spark, table):
+    """Expiring history removes the expired versions from the metadata
+    scan, every survivor still time-travels to its own content, and an
+    expired version raises."""
     from data_pipeline_spark_iceberg_dbt_airflow_spark.snapshots import (
         snapshot_vacuum,
     )
 
-    for i in range(9):  # versions 0..8, checkpoint at v5
+    for i in range(9):  # versions 0..8
         snapshot_append(_df(spark, [i]), table)
     snapshot_overwrite(_df(spark, list(range(10))), table)  # v9
-    for i in (10, 11):  # v10 (checkpoint), v11
+    for i in (10, 11):  # v10, v11
         snapshot_append(_df(spark, [i]), table)
     removed = snapshot_vacuum(table, keep_versions=3)
     assert removed  # the overwrite orphaned the expired appends' dirs
-    import data_pipeline_spark_iceberg_dbt_airflow_spark.snapshots as snap
-
-    manifests = snap._load_manifests(table)
-    assert [m["version"] for m in manifests] == [9, 10, 11]
-    names = sorted(os.listdir(os.path.join(table, "_snapshots")))
-    assert [n for n in names if n.startswith("c")] == ["c00000011.json"]
+    vs = sorted(r["version"] for r in snapshot_versions(spark, table).collect())
+    assert vs == [9, 10, 11]
     assert sorted(
         r["id"] for r in snapshot_read(spark, table, version=9).collect()
     ) == list(range(10))
@@ -749,60 +732,81 @@ def test_vacuum_rebuilds_checkpoints_on_expiry(spark, table, small_checkpoints):
         snapshot_read(spark, table, version=4)
 
 
-def test_vacuum_prunes_folded_manifests(spark, table, small_checkpoints):
-    """prune_folded deletes v-files at or below the SECOND-newest
-    checkpoint (doubly-folded history), bounding the listing at
-    ~CHECKPOINT_EVERY names -- while every folded version stays
-    time-travelable and the corrupt-newest-checkpoint fallback still
-    reconstructs the full log from the older checkpoint + surviving
-    v-files."""
+def _data_dirs(table):
+    return sorted(os.listdir(os.path.join(table, "data")))
+
+
+def test_vacuum_raises_on_an_unreadable_survivor(spark, table):
+    """Liveness comes from every surviving manifest: when one cannot be
+    parsed, vacuum raises before it deletes anything -- no orphan is
+    swept and no manifest is expired."""
+    from data_pipeline_spark_iceberg_dbt_airflow_spark.snapshots import (
+        snapshot_vacuum,
+    )
+
+    snapshot_append(_df(spark, [1]), table)  # v0
+    snapshot_overwrite(_df(spark, [2]), table)  # v1
+    snapshot_append(_df(spark, [3]), table)  # v2
+    orphan = os.path.join(table, "data", "99999999-deadbeef")
+    _df(spark, [7]).write.mode("overwrite").parquet(orphan)
+    mdir = os.path.join(table, "_snapshots")
+    with open(os.path.join(mdir, "v00000001.json"), "w") as f:
+        f.write('{"version": 1, "dir')  # torn by an outside writer
+    manifests = sorted(os.listdir(mdir))
+    dirs = _data_dirs(table)
+    for keep in (None, 2):
+        with pytest.raises(ValueError):
+            snapshot_vacuum(table, keep_versions=keep)
+        assert sorted(os.listdir(mdir)) == manifests
+        assert _data_dirs(table) == dirs
+    assert sorted(r["id"] for r in snapshot_read(spark, table).collect()) == [2, 3]
+
+
+def test_vacuum_interrupted_expiry_leaves_a_readable_tail(
+    spark, table, monkeypatch
+):
+    """An expiry whose manifest removes start failing part way raises
+    with a contiguous tail of versions left, each reading its own
+    content, and sweeps no data; a re-run finishes the expiry."""
     import data_pipeline_spark_iceberg_dbt_airflow_spark.snapshots as snap
     from data_pipeline_spark_iceberg_dbt_airflow_spark.snapshots import (
         snapshot_vacuum,
     )
 
-    for i in range(13):  # versions 0..12; checkpoints at v5 and v10
-        snapshot_append(_df(spark, [i]), table)
-    mdir = os.path.join(table, "_snapshots")
-    removed = snapshot_vacuum(table, prune_folded=True)
-    vnames = sorted(
-        n for n in os.listdir(mdir) if n.startswith("v") and n.endswith(".json")
-    )
-    # bound = second-newest checkpoint (v5): v0..v5 pruned, v6.. kept
-    assert vnames == [f"v{i:08d}.json" for i in range(6, 13)]
-    assert len(removed) == 6
-    # nothing lost: full log, latest read, and travel INTO the pruned
-    # range all come off the checkpointed spelling
-    assert [m["version"] for m in snap._load_manifests(table)] == list(
-        range(13)
-    )
-    assert sorted(
-        r["id"] for r in snapshot_read(spark, table).collect()
-    ) == list(range(13))
-    assert sorted(
-        r["id"] for r in snapshot_read(spark, table, version=3).collect()
-    ) == [0, 1, 2, 3]
-    # corrupt the NEWEST checkpoint: the fallback (older checkpoint +
-    # the v-files the prune deliberately kept above it) must still
-    # reconstruct every version
-    with open(os.path.join(mdir, "c00000010.json"), "w") as f:
-        f.write("not json at all")
-    assert [m["version"] for m in snap._load_manifests(table)] == list(
-        range(13)
-    )
-    assert sorted(
-        r["id"] for r in snapshot_read(spark, table, version=4).collect()
-    ) == [0, 1, 2, 3, 4]
-    # a single-checkpoint table has no doubly-covered range: no prune
-    fresh = table + "_single"
-    for i in range(7):  # one checkpoint (v5)
-        snapshot_append(_df(spark, [i]), fresh)
-    assert snapshot_vacuum(fresh, prune_folded=True) == []
-    assert sorted(
-        n
-        for n in os.listdir(os.path.join(fresh, "_snapshots"))
-        if n.startswith("v")
-    ) == [f"v{i:08d}.json" for i in range(7)]
+    content = {0: [0], 1: [0, 1], 2: [2], 3: [2, 3], 4: [2, 3, 4], 5: [2, 3, 4, 5]}
+    for v in range(6):
+        commit = snapshot_overwrite if v == 2 else snapshot_append
+        commit(_df(spark, [v]), table)
+    orphan = os.path.join(table, "data", "99999999-deadbeef")
+    _df(spark, [7]).write.mode("overwrite").parquet(orphan)
+    dirs = _data_dirs(table)
+    real_remove = os.remove
+    done = {"n": 0}
+
+    def failing_remove(path):
+        if done["n"] == 2:
+            raise PermissionError(f"store refused to delete {path}")
+        done["n"] += 1
+        real_remove(path)
+
+    monkeypatch.setattr(snap.os, "remove", failing_remove)
+    with pytest.raises(PermissionError):
+        snapshot_vacuum(table, keep_versions=2)  # expires v0..v3
+    monkeypatch.setattr(snap.os, "remove", real_remove)
+
+    def versions():
+        return sorted(
+            r["version"] for r in snapshot_versions(spark, table).collect()
+        )
+
+    assert versions() == [2, 3, 4, 5]
+    assert _data_dirs(table) == dirs
+    for v in versions():
+        got = snapshot_read(spark, table, version=v).collect()
+        assert sorted(r["id"] for r in got) == content[v], v
+    removed = snapshot_vacuum(table, keep_versions=2)
+    assert orphan in removed and versions() == [4, 5]
+    assert sorted(r["id"] for r in snapshot_read(spark, table).collect()) == content[5]
 
 
 # --- model-based property: op sequences vs a pure-Python model -------------
@@ -816,7 +820,6 @@ _ops = st.lists(
         st.tuples(st.just("overwrite"), st.lists(st.integers(0, 9), min_size=1, max_size=3)),
         st.tuples(st.just("rollback"), st.integers(0, 5)),
         st.tuples(st.just("vacuum_keep"), st.integers(1, 3)),
-        st.tuples(st.just("vacuum_prune"), st.just(0)),
     ),
     min_size=1,
     max_size=7,
@@ -835,34 +838,13 @@ def test_snapshot_sequences_match_model(spark, tmp_path_factory, ops):
     trivial in-memory model predicts -- and every version that
     survives vacuum must time-travel to its modeled historical
     content. Rollback targets are taken modulo the existing history;
-    vacuum(keep) must never change the LATEST content.
-
-    Runs with CHECKPOINT_EVERY=2 so every example exercises the
-    checkpointed log (fold, tail reads, vacuum rebuild) under random
-    op interleavings; the uncheckpointed path is pinned by the unit
-    tests above."""
-    import data_pipeline_spark_iceberg_dbt_airflow_spark.snapshots as snap
+    vacuum(keep) must never change the LATEST content."""
     from data_pipeline_spark_iceberg_dbt_airflow_spark.snapshots import (
         snapshot_rollback,
         snapshot_vacuum,
-        snapshot_versions,
     )
 
     table = str(tmp_path_factory.mktemp("prop") / "tbl")
-    old_every = snap.CHECKPOINT_EVERY
-    snap.CHECKPOINT_EVERY = 2
-    try:
-        _run_model_sequence(
-            spark, table, ops, snapshot_rollback, snapshot_vacuum,
-            snapshot_versions,
-        )
-    finally:
-        snap.CHECKPOINT_EVERY = old_every
-
-
-def _run_model_sequence(
-    spark, table, ops, snapshot_rollback, snapshot_vacuum, snapshot_versions
-):
     history: list[list[int]] = []  # version -> content (multiset as sorted list)
     live_versions: list[int] = []
     for op, arg in ops:
@@ -888,11 +870,6 @@ def _run_model_sequence(
             keep = min(arg, len(live_versions))
             snapshot_vacuum(table, keep_versions=keep)
             live_versions = live_versions[-keep:]
-        else:  # vacuum_prune: metadata-only, model state unchanged --
-            # every live version must remain travelable afterwards
-            if not history:
-                continue
-            snapshot_vacuum(table, prune_folded=True)
     if not history:
         return
     got = sorted(r["id"] for r in snapshot_read(spark, table).collect())
@@ -1234,48 +1211,3 @@ def test_compact_tombstones_drops_aged_keeps_guarding(spark, tmp_path):
         compact_tombstones(spark, table_dir, "seq", "nope", 1)
     with pytest.raises(ValueError, match="has no 'missing_seq'"):
         compact_tombstones(spark, table_dir, "missing_seq", "is_delete", 1)
-
-
-def test_vacuum_checkpoint_write_failure_cannot_resurrect_history(
-    spark, table, small_checkpoints, monkeypatch
-):
-    """Round-8 ADVICE: when the expiry rebuild's checkpoint write fails
-    AND keep_ver coincides with a regular CHECKPOINT_EVERY fold, the
-    PRE-EXISTING c<keep_ver>.json folds the just-expired manifests --
-    exempting it from the sweep on the failed write's behalf would
-    resurrect expired history on the next load. The sweep must remove
-    it (log degrades to v-files), and the liveness set must keep the
-    in-memory survivors so no live data dir is swept."""
-    import data_pipeline_spark_iceberg_dbt_airflow_spark.snapshots as snap
-    from data_pipeline_spark_iceberg_dbt_airflow_spark.snapshots import (
-        snapshot_vacuum,
-    )
-
-    for i in range(11):  # versions 0..10; checkpoints at v5 and v10
-        snapshot_append(_df(spark, [i]), table)
-    cdir = os.path.join(table, "_snapshots")
-    assert "c00000010.json" in os.listdir(cdir)  # keep_ver's name, stale
-
-    real_write = snap._write_checkpoint
-
-    def failing_write(table_dir, version, manifests=None):
-        return False  # swallowed OSError path: nothing written
-
-    monkeypatch.setattr(snap, "_write_checkpoint", failing_write)
-    snapshot_vacuum(table, keep_versions=2)  # survivors: v9, v10
-    monkeypatch.setattr(snap, "_write_checkpoint", real_write)
-
-    # no checkpoint survived -- especially not the stale keep_name one
-    assert not [n for n in os.listdir(cdir) if n.startswith("c")]
-    # degraded v-file log spells exactly the survivors; expired history
-    # is NOT resurrected
-    assert [m["version"] for m in snap._load_manifests(table)] == [9, 10]
-    with pytest.raises(ValueError):
-        snapshot_read(spark, table, version=4)
-    # survivors' data was not swept as dead
-    assert sorted(
-        r["id"] for r in snapshot_read(spark, table).collect()
-    ) == list(range(11))
-    assert sorted(
-        r["id"] for r in snapshot_read(spark, table, version=9).collect()
-    ) == list(range(10))
