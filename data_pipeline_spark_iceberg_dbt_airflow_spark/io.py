@@ -10,6 +10,21 @@ Scale notes: `spark.read.parquet` is a DataSource-V2 scan -- predicate
 pushdown, column pruning, and partition pruning are free as long as callers
 express filters/projections declaratively (verified in tests via
 `explain()` containing PushedFilters/ReadSchema).
+
+Per-session state (``SESSION_STATE``, read through ``session_cache``):
+scans here, probe verdicts and persisted frames in ``queries.dedup`` and
+``queries.similarity``. It is keyed on the live ``SparkSession`` wrapper
+itself, because that is what a session is: ``spark.newSession()`` shares
+the SparkContext but has its own conf and temp views, so it gets its own
+scans and probes and is never served a frame bound to another session.
+Lifetime: a session's entries live as long as its wrapper does (the weak
+key drops them with it), so no finalizer is needed. A cached frame holds
+its wrapper (``df.sparkSession``), so a session that has read a table
+through ``read_table`` keeps its wrapper, and with it its entries, until
+the process exits. ``release_shingle_index`` and ``release_normed_corpus``
+unpersist and drop the large persisted frames; the scans they leave are
+plans, not data. A session that only cached probe verdicts is let go
+with its wrapper.
 """
 
 from __future__ import annotations
@@ -209,66 +224,34 @@ def _normalize_ntz(df: DataFrame) -> DataFrame:
     return df
 
 
-#: Session object -> its lifetime-unique token. Keyed on the live wrapper
-#: object (weakly, so this map can't keep sessions alive); the token itself
-#: comes from the JVM app (applicationId embeds a timestamp), so a recycled
-#: CPython id() can never alias a stopped session's cache entries -- the
-#: round-3 advisor finding against the old ``id(spark)`` keys.
-_SESSION_TOKENS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+#: Per-session state: the live SparkSession wrapper -> {cache name -> dict}
+#: (see the module docstring for why the key is the wrapper and how long
+#: the entries live). Read and written only through :func:`session_cache`;
+#: the ``release_*`` functions iterate it to reach every live session.
+SESSION_STATE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
-def session_token(spark: SparkSession) -> str:
-    """A key for ``spark`` that is unique across the process's lifetime.
-
-    ``applicationId:startTime`` -- stable for all Python wrappers of one
-    JVM session, never reused by a later session. When the wrapper object
-    is garbage-collected, its cache entries are purged (finalizer), so the
-    module caches stay bounded by the number of LIVE sessions.
-    """
-    tok = _SESSION_TOKENS.get(spark)
-    if tok is None:
-        sc = spark.sparkContext
-        tok = f"{sc.applicationId}:{sc.startTime}"
-        _SESSION_TOKENS[spark] = tok
-        weakref.finalize(spark, _purge_scan_cache, tok)
-    return tok
+def session_cache(spark: SparkSession, name: str) -> dict:
+    """The dict ``name`` of ``spark``'s state, created empty on first use."""
+    return SESSION_STATE.setdefault(spark, {}).setdefault(name, {})
 
 
-def _purge_scan_cache(tok: str) -> None:
-    for k in [k for k in _SCAN_CACHE if k[0] == tok]:
-        del _SCAN_CACHE[k]
-    for fn in _CACHE_PURGERS:
-        fn(tok)
-
-
-#: Modules with their own session-token-keyed caches (e.g. the
-#: similarity normed-corpus pin) register a ``callable(tok)`` here; it
-#: runs from the same finalizer as the scan-cache purge, so no module
-#: cache can outlive the session wrapper that keyed it.
-_CACHE_PURGERS: list = []
-
-
-def register_cache_purger(fn) -> None:
-    _CACHE_PURGERS.append(fn)
-
-
-#: (session token, path) -> scan DataFrame. The testdata tables are
-#: immutable, so re-running file listing + footer schema resolution on every
-#: ``read_table`` call (~0.1-0.25 s of pure driver work per query) buys
-#: nothing; a DataFrame is an immutable plan, safe to share. This is the
-#: local-mode analog of what a real deployment gets from catalog tables:
-#: the metastore caches file-level metadata so repeated scans of an
-#: unchanged table never re-list the object store. Writers in this module
-#: write to OTHER paths (never into a testdata dir), so entries can't go
-#: stale.
-_SCAN_CACHE: dict[tuple, DataFrame] = {}
-
-
+#: The session's "scan" cache holds three shapes per testdata table:
+#: ``path`` (the converted scan), ``(path, "raw")`` and ``(path, "widen")``.
+#: The testdata tables are immutable, so re-running file listing + footer
+#: schema resolution on every ``read_table`` call (~0.1-0.25 s of pure
+#: driver work per query) buys nothing; a DataFrame is an immutable plan,
+#: safe to share within its session. This is the local-mode analog of what
+#: a real deployment gets from catalog tables: the metastore caches
+#: file-level metadata so repeated scans of an unchanged table never
+#: re-list the object store. Writers in this module write to OTHER paths
+#: (never into a testdata dir), so entries can't go stale.
 def _raw_scan(spark: SparkSession, path: str) -> DataFrame:
-    key = (session_token(spark), path, "raw")
-    cached = _SCAN_CACHE.get(key)
+    scans = session_cache(spark, "scan")
+    key = (path, "raw")
+    cached = scans.get(key)
     if cached is None:
-        cached = _SCAN_CACHE[key] = spark.read.parquet(path)
+        cached = scans[key] = spark.read.parquet(path)
     return cached
 
 
@@ -306,22 +289,21 @@ def read_table(
     # AnalysisException from whichever action first analyzes the plan).
     if not os.path.exists(path):
         raise FileNotFoundError(f"table {name!r} not found at {path}")
-    key = (session_token(spark), path)
-    df = _SCAN_CACHE.get(key)
+    scans = session_cache(spark, "scan")
+    df = scans.get(path)
     if df is None:
         ns_cols = _nanos_columns(path)
         if ns_cols:
             _ensure_nanos_conf(spark)
-        df = _convert_ns(_raw_scan(spark, path), ns_cols)
-        _SCAN_CACHE[key] = df
+        df = scans[path] = _convert_ns(_raw_scan(spark, path), ns_cols)
     if widen:
         # Memoized per (session, path): the probe's df.rdd.getNumPartitions()
         # is a plan->RDD py4j round trip, and the answer cannot change for an
         # immutable testdata table within a session (round-8 ADVICE: five hot
         # call sites were paying it per invocation). The widened DataFrame is
         # an immutable plan, safe to share like the scan itself.
-        wkey = (key[0], path, "widen")
-        wdf = _SCAN_CACHE.get(wkey)
+        wkey = (path, "widen")
+        wdf = scans.get(wkey)
         if wdf is None:
             par = spark.sparkContext.defaultParallelism
             rg = _row_group_count(path)
@@ -329,7 +311,7 @@ def read_table(
             if rg is not None:
                 eff = min(eff, rg)
             wdf = df.repartition(par) if eff < par else df
-            _SCAN_CACHE[wkey] = wdf
+            scans[wkey] = wdf
         return wdf
     return df
 

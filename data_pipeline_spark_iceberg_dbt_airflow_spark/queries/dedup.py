@@ -59,7 +59,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import read_table, session_token, table_row_count
+from ..io import SESSION_STATE, read_table, session_cache, table_row_count
 from ..operators.graph import connected_components
 from .registry import register
 
@@ -156,22 +156,17 @@ def _tokens_col() -> F.Column:
     return F.split(F.expr(_NORM), " ")
 
 
-#: Build the shingle rows with the Arrow kernel (default) instead of the
-#: Catalyst transform/md5 expression. The expression path stays as the
-#: reference rendering (same formula as the DuckDB oracle CTEs) and is
-#: pinned bit-equal to the kernel by tests/test_dedup.py's differential;
-#: flip to False to fall back. Rationale: transform(sequence(...)) +
-#: per-element md5/conv/substr is CodegenFallback -- interpreted
-#: per-shingle expression eval was the dominant lexical-stage term at 1M
-#: docs (44.2s of ~77s, f47a063:tools/lexical_attrib.py r10), while
-#: hashlib.md5 over Arrow batches does the identical arithmetic at C
-#: speed.
-SHINGLE_KERNEL = True
-
-
-#: Cached executor-probe verdicts, keyed by the session-lifetime token
-#: (one tiny probe job per session, not per index build).
-_LOCALE_PROBE_CACHE: dict = {}
+# Shingle rows come from the Arrow kernel whenever the locale probe
+# passes; the Catalyst transform/md5 expression is the reference
+# rendering (same formula as the DuckDB oracle CTEs), pinned bit-equal to
+# the kernel by tests/test_dedup.py's differential, and the fallback when
+# the probe fails. Rationale: transform(sequence(...)) + per-element
+# md5/conv/substr is CodegenFallback -- interpreted per-shingle
+# expression eval was the dominant lexical-stage term at 1M docs (44.2s
+# of ~77s, f47a063:tools/lexical_attrib.py r10), while hashlib.md5 over
+# Arrow batches does the identical arithmetic at C speed. The probe's
+# verdict is kept in the session's "probes" cache under "locale" (one
+# tiny probe job per session, not per index build).
 
 #: The probe string exercises every Java locale-sensitive lowercase
 #: rule: 'I' diverges under tr/az (dotless ı), 'Ì' under lt (i +
@@ -197,15 +192,15 @@ def _kernel_locale_ok(spark) -> bool:
     job (the ``when(id < 0, ...)`` dependence on the range column keeps
     the optimizer from folding ``lower()`` on the driver) evaluates the
     probe where real shingling would run and compares against Python's
-    locale-independent ``str.lower()``. Cached once per session token;
+    locale-independent ``str.lower()``. Cached once per session;
     any mismatch or probe failure falls back to the expression path.
     Caveat that remains: the probe samples ONE executor -- a fleet with
     heterogeneous per-executor locales (no launcher configures this)
     could still pass; homogeneous-fleet is the documented assumption.
     """
-    key = session_token(spark)
-    if key in _LOCALE_PROBE_CACHE:
-        return _LOCALE_PROBE_CACHE[key]
+    probes = session_cache(spark, "probes")
+    if "locale" in probes:
+        return probes["locale"]
     try:
         row = (
             spark.range(1)
@@ -224,7 +219,7 @@ def _kernel_locale_ok(spark) -> bool:
         ok = row is not None and row["lo"] == _LOCALE_PROBE.lower()
     except Exception:
         ok = False
-    _LOCALE_PROBE_CACHE[key] = ok
+    probes["locale"] = ok
     return ok
 
 
@@ -234,7 +229,7 @@ def _shingle_rows_expr(docs: DataFrame) -> DataFrame:
     The literal Spark-SQL transcription of ORACLE_SHINGLE_CTES: one
     interpreted md5+conv per shingle inside transform(sequence(...)).
     Kept as the cross-engine reference the kernel is differenced
-    against; not the default build path (see SHINGLE_KERNEL).
+    against, and the fallback when the locale probe fails.
     """
     return (
         docs.select("doc_id", _tokens_col().alias("t"))
@@ -336,22 +331,19 @@ def _shingle_rows_kernel(docs: DataFrame) -> DataFrame:
     )
 
 
-#: One persisted shingle index per (JVM session, sf_dir). Bounded by the
-#: number of distinct corpora a session touches (not by invocation count),
-#: and releasable -- the round-2 persist()-per-call leak is gone. Keyed on
-#: the session-lifetime token (io.session_token), not id(spark): a recycled
-#: CPython id can never alias a stopped session's persisted plans.
-_INDEX_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-#: The pre-cap raw explode backing each index (kept pinned so the df-cap
-#: aggregate and the capped output share ONE tokenize+md5 pass).
-_RAW_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-#: (table_name, bucket_count) backing each TABLE-BACKED index cache
-#: entry (materialize_shingle_index). Recorded so a later call with
-#: different arguments, or a dropped backing table, rebuilds instead of
-#: silently returning the stale frame (ADVICE r13).
-_TABLE_META: dict[tuple[str, str], tuple[str, int]] = {}
+#: The session's shingle caches (io.session_cache), each keyed by sf_dir:
+#:
+#: - "shingle_index": one persisted (or table-backed) index per corpus.
+#:   Bounded by the number of distinct corpora a session touches (not by
+#:   invocation count), and releasable -- the round-2 persist()-per-call
+#:   leak is gone.
+#: - "shingle_raw": the pre-cap raw explode backing an in-memory index
+#:   (kept pinned so the df-cap aggregate and the capped output share ONE
+#:   tokenize+md5 pass).
+#: - "shingle_table": (table_name, bucket_count) backing a TABLE-BACKED
+#:   index (materialize_shingle_index). Recorded so a later call with
+#:   different arguments, or a dropped backing table, rebuilds instead of
+#:   silently returning the stale frame (ADVICE r13).
 
 
 def shingled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -363,7 +355,7 @@ def shingled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``n_sh`` the doc's capped shingle count. Hashing happens ONCE here,
     inside the Arrow shingle kernel (round 3 recomputed md5 per
     consumer; round 11 moved the tokenize+md5 pass off the interpreted
-    transform -- see SHINGLE_KERNEL);
+    transform -- see _kernel_locale_ok);
     per-doc dedup happens ROW-SIDE (array_distinct before explode -- no
     corpus-wide distinct shuffle); the df-cap is one groupBy(sid) +
     broadcast anti-join; ``n_sh`` is a sort-free count over a
@@ -373,9 +365,9 @@ def shingled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids, never text. Persisted once per (session, sf_dir) and freed via
     :func:`release_shingle_index`.
     """
-    key = (session_token(spark), sf_dir)
-    if key in _INDEX_CACHE:
-        return _INDEX_CACHE[key]
+    index = session_cache(spark, "shingle_index")
+    if sf_dir in index:
+        return index[sf_dir]
     raw, out = _index_lineage(spark, sf_dir)
     out = out.persist()
     # Both caches stay pinned for the session (the raw explode is ~16
@@ -383,8 +375,8 @@ def shingled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # together by release_shingle_index: an eager count() here would
     # serialize an extra action into every cold build (measured +0.5s at
     # sf0.1) just to drop the raw cache early.
-    _INDEX_CACHE[key] = out
-    _RAW_CACHE[key] = raw
+    index[sf_dir] = out
+    session_cache(spark, "shingle_raw")[sf_dir] = raw
     return out
 
 
@@ -472,8 +464,8 @@ def _index_lineage(
     # Shingling is the CPU-bound stage of the whole dedup family; make sure
     # it runs on every core even when the scan is a single parquet split.
     docs = read_table(spark, sf_dir, "documents", widen=True)
-    use_kernel = SHINGLE_KERNEL and _kernel_locale_ok(spark)
-    if SHINGLE_KERNEL and not use_kernel:
+    use_kernel = _kernel_locale_ok(spark)
+    if not use_kernel:
         import warnings
 
         warnings.warn(
@@ -525,12 +517,13 @@ def _index_lineage(
 
 
 def release_shingle_index(spark: SparkSession | None = None) -> None:
-    """Unpersist cached shingle indexes (all, or one session's)."""
-    tok = None if spark is None else session_token(spark)
-    for cache in (_INDEX_CACHE, _RAW_CACHE):
-        for key in list(cache):
-            if tok is None or key[0] == tok:
-                df = cache.pop(key)
+    """Unpersist cached shingle indexes (every live session's, or one
+    session's)."""
+    for s in list(SESSION_STATE) if spark is None else [spark]:
+        for name in ("shingle_index", "shingle_raw"):
+            cache = session_cache(s, name)
+            while cache:
+                df = cache.popitem()[1]
                 try:
                     df.unpersist()
                 except Exception:
@@ -538,9 +531,7 @@ def release_shingle_index(spark: SparkSession | None = None) -> None:
                     # has nothing to unpersist; dropping the cache
                     # entry is the whole release
                     pass
-    for key in list(_TABLE_META):
-        if tok is None or key[0] == tok:
-            _TABLE_META.pop(key, None)
+        session_cache(s, "shingle_table").clear()
 
 
 def materialize_shingle_index(
@@ -574,11 +565,13 @@ def materialize_shingle_index(
     """
     from ..operators.layout import write_bucketed
 
-    key = (session_token(spark), sf_dir)
-    cached = _INDEX_CACHE.get(key)
-    table_backed = cached is not None and key not in _RAW_CACHE
+    index = session_cache(spark, "shingle_index")
+    raws = session_cache(spark, "shingle_raw")
+    metas = session_cache(spark, "shingle_table")
+    cached = index.get(sf_dir)
+    table_backed = cached is not None and sf_dir not in raws
     if table_backed:
-        meta = _TABLE_META.get(key)
+        meta = metas.get(sf_dir)
         if meta == (table, bucket_count) and spark.catalog.tableExists(
             table
         ):
@@ -589,20 +582,20 @@ def materialize_shingle_index(
             # the cached frame scans a table that no longer exists --
             # evict BEFORE shingled_docs would hand it back as the
             # rebuild source and crash at read time
-            _INDEX_CACHE.pop(key, None)
-            _TABLE_META.pop(key, None)
+            index.pop(sf_dir, None)
+            metas.pop(sf_dir, None)
         elif meta[0] == table:
             # SAME table, DIFFERENT bucket count (ADVICE r14): the
             # cached frame scans the very table this call must
             # overwrite -- using it as the write source raises
             # UNSUPPORTED_OVERWRITE.TABLE. Evict and rebuild cold from
             # the raw corpus instead.
-            _INDEX_CACHE.pop(key, None)
-            _TABLE_META.pop(key, None)
+            index.pop(sf_dir, None)
+            metas.pop(sf_dir, None)
         # else: a DIFFERENT old table still exists; shingled_docs
         # returns its scan, a valid (and cheap) source for the
         # re-bucketed write
-    if key not in _INDEX_CACHE:
+    if sf_dir not in index:
         # COLD build-to-table (r14, VERDICT r13 #1): the r13 shape went
         # through shingled_docs' persist, so the write action populated
         # a 231M-row (at 4M docs) index cache whose ONLY reader was the
@@ -621,7 +614,7 @@ def materialize_shingle_index(
         finally:
             # a failed write must not leak the persisted raw explode
             # for the rest of the session (ADVICE r14): it is neither
-            # registered in _RAW_CACHE nor reachable by
+            # registered in "shingle_raw" nor reachable by
             # release_shingle_index once this frame goes out of scope
             raw.unpersist()
     else:
@@ -629,10 +622,10 @@ def materialize_shingle_index(
         # the memory tiers
         idx = shingled_docs(spark, sf_dir)
         write_bucketed(idx, table, "doc_id", bucket_count, sort=True)
-        for cache in (_INDEX_CACHE, _RAW_CACHE):
-            if key in cache:
-                cache.pop(key).unpersist()
-    _TABLE_META[key] = (table, bucket_count)
+        for cache in (index, raws):
+            if sf_dir in cache:
+                cache.pop(sf_dir).unpersist()
+    metas[sf_dir] = (table, bucket_count)
     # BARE table scan, deliberately un-persisted (r13, measured BOTH
     # ways at 4M): persisting the scan pinned ~231M rows of cache
     # blocks through the rest of the DAG and recreated the r12
@@ -645,7 +638,7 @@ def materialize_shingle_index(
     # the index never fits executor storage anyway; the disk-backed
     # boundary IS the scale shape.
     out = spark.table(table)
-    _INDEX_CACHE[key] = out
+    index[sf_dir] = out
     return out
 
 
@@ -1693,18 +1686,17 @@ def split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Build the stride-1 span digests with the Arrow kernel (default)
-#: instead of the Catalyst transform/md5 expression -- the same
-#: playbook as SHINGLE_KERNEL (r15, VERDICT r14 #3: the interpreted
-#: explode was span_deduped's dominant term, 120.1s/216M spans at 4M
-#: per f47a063:tools/span_attrib.py, and the composed operator pays it
-#: TWICE: once for the frequent-digest aggregate, once for the flag join).
-#: The expression path stays as the oracle-mirroring reference and is
-#: pinned bit-equal by tests/test_span_kernel.py's differential; the
-#: kernel engages only when the behavioral locale probe certifies
-#: lower() bit-equality (see _kernel_locale_ok).
-SPAN_KERNEL = True
-
+#: The stride-1 span digests have an Arrow kernel beside the Catalyst
+#: transform/md5 expression -- the same playbook as the shingle kernel
+#: (r15, VERDICT r14 #3: the interpreted explode was span_deduped's
+#: dominant term, 120.1s/216M spans at 4M per
+#: f47a063:tools/span_attrib.py, and the composed operator pays it TWICE:
+#: once for the frequent-digest aggregate, once for the flag join). The
+#: expression path stays as the oracle-mirroring reference and is pinned
+#: bit-equal by tests/test_span_kernel.py's differential; the kernel
+#: engages only when the caller asks for it and the behavioral locale
+#: probe certifies lower() bit-equality (see _kernel_locale_ok).
+#:
 #: Above this many documents (footer row count) size-aware callers ask
 #: for the kernel; below it the expression path wins -- the kernel's
 #: fixed per-task Python/Arrow overhead dominates tiny inputs (measured
@@ -1756,7 +1748,7 @@ def _span_occ_kernel(docs: DataFrame, window: int) -> DataFrame:
       IS the digest); lower() runs on the JOINED window in both
       renderings, and the kernel only engages when the executor locale
       probe certifies Python/JVM lowercase equality (same guard as
-      SHINGLE_KERNEL).
+      the shingle kernel).
     - NULL text emits no rows (``size(NULL) = -1`` fails the length
       guard); a NULL doc_id's span rows flow through with a NULL id
       exactly as posexplode emits them; docs shorter than ``window``
@@ -1841,7 +1833,7 @@ def mask_repeated_spans(
     *,
     keep_first: bool = True,
     broadcast_frequent: bool = True,
-    kernel: bool | None = None,
+    kernel: bool = True,
 ) -> DataFrame:
     """Substring-level dedup: mask token SPANS that repeat across the
     corpus -- the passage-granularity step between doc-level dedup (too
@@ -1911,16 +1903,15 @@ def mask_repeated_spans(
     )
     with_toks = docs.withColumn("wt", case_tokens)
     # stride-1 window digests with positions -- the Arrow kernel when
-    # the caller asks for it (``kernel=None`` defaults to on; size-
-    # aware callers pass ``n_docs > SPAN_KERNEL_BOUND``) AND the locale
-    # probe certifies lower() bit-equality; else the expression
-    # rendering (see SPAN_KERNEL; both paths differential-pinned
-    # bit-equal). The composed operator evaluates occ twice (frequent
-    # aggregate + flag join), so this is the dominant term.
-    use_kernel = SPAN_KERNEL if kernel is None else kernel
+    # the caller asks for it (size-aware callers pass ``n_docs >
+    # SPAN_KERNEL_BOUND``) AND the locale probe certifies lower()
+    # bit-equality; else the expression rendering (both paths
+    # differential-pinned bit-equal). The composed operator evaluates
+    # occ twice (frequent aggregate + flag join), so this is the
+    # dominant term.
     occ = (
         _span_occ_kernel(docs, window)
-        if use_kernel and SPAN_KERNEL and _kernel_locale_ok(docs.sparkSession)
+        if kernel and _kernel_locale_ok(docs.sparkSession)
         else _span_occ_expr(with_toks, window)
     )
     frequent = (

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..functions import det
 from ..io import read_table, scan_time_range
+from ..plans.models import fct_daily
 from .registry import register
 
 
@@ -77,12 +78,7 @@ def ref_fct_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").alias("data_source"),
         F.coalesce(F.col("value"), F.lit(0.0)).alias("price_usd"),
     )
-    return stg.groupBy("extraction_date", "data_source").agg(
-        F.min("price_usd").alias("min_price_usd"),
-        F.max("price_usd").alias("max_price_usd"),
-        det.davg("price_usd").alias("avg_price_usd"),
-        F.count(F.lit(1)).alias("records"),
-    )
+    return fct_daily(stg, group_keys=("extraction_date", "data_source"))
 
 
 @register(

@@ -53,12 +53,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.lits import array_lit
-from ..io import (
-    read_table,
-    register_cache_purger,
-    session_token,
-    table_row_count,
-)
+from ..io import SESSION_STATE, read_table, session_cache, table_row_count
 from .registry import register
 
 #: Query batch: the first QUERY_N vectors by vec_id.
@@ -140,16 +135,14 @@ def _o_cosine(a: str, b: str) -> str:
     return f"({_o_dot(a, b)} / ({_o_norm(a)} * {_o_norm(b)}))"
 
 
-#: One persisted normed corpus per (JVM session, sf_dir) -- the
-#: similarity family's analog of dedup's shared shingle index. Six
-#: family branches (ivf/lsh/pairs/q8/kseed/pq) each stream the corpus;
-#: without the pin every branch re-scans and re-widens it (measured
-#: round 6: ~0.6s of redundant stages per sim_ann_family run at sf0.1,
-#: and at 100 TB it is the difference between one corpus pass and six).
-#: Keyed on io.session_token, released via release_normed_corpus.
-_NORMED_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# One persisted normed corpus per session and sf_dir, in the session's
+# "normed" cache (io.session_cache) -- the similarity family's analog of
+# dedup's shared shingle index. Six family branches
+# (ivf/lsh/pairs/q8/kseed/pq) each stream the corpus; without the pin
+# every branch re-scans and re-widens it (measured round 6: ~0.6s of
+# redundant stages per sim_ann_family run at sf0.1, and at 100 TB it is
+# the difference between one corpus pass and six). Released via
+# release_normed_corpus.
 def _normed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus with the per-VECTOR norm precomputed (pre-join projection):
     cuts the fold work per pair from 3 to 1; a vector's norm is
@@ -161,41 +154,24 @@ def _normed(spark: SparkSession, sf_dir: str) -> DataFrame:
     would run all pair arithmetic on one core (at 100 TB the scan arrives
     as thousands of splits and the widen is a guarded no-op). Persisted
     once per (session, sf_dir) and shared across the family's branches."""
-    key = (session_token(spark), sf_dir)
-    if key in _NORMED_CACHE:
-        return _NORMED_CACHE[key]
+    normed = session_cache(spark, "normed")
+    if sf_dir in normed:
+        return normed[sf_dir]
     emb = read_table(spark, sf_dir, "embeddings", widen=True)
     out = emb.select(
         "vec_id", "label", "embedding", norm(F.col("embedding")).alias("nrm")
     ).persist()
-    _NORMED_CACHE[key] = out
+    normed[sf_dir] = out
     return out
 
 
 def release_normed_corpus(spark: SparkSession | None = None) -> None:
-    """Unpersist cached normed corpora (all, or one session's)."""
-    tok = None if spark is None else session_token(spark)
-    for key in list(_NORMED_CACHE):
-        if tok is None or key[0] == tok:
-            _NORMED_CACHE.pop(key).unpersist()
-
-
-def _purge_normed(tok: str) -> None:
-    """Finalizer-driven eviction (registered with io's purger list):
-    when a session wrapper is garbage-collected its normed-corpus pins
-    are dropped, so a long-lived process cycling sessions cannot
-    accumulate dead-session DataFrames. unpersist is attempted (frees
-    executor storage if the JVM session is still live) but swallowed if
-    the context is already stopped -- the drop is the contract."""
-    for key in [k for k in _NORMED_CACHE if k[0] == tok]:
-        df = _NORMED_CACHE.pop(key)
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-
-
-register_cache_purger(_purge_normed)
+    """Unpersist cached normed corpora (every live session's, or one
+    session's)."""
+    for s in list(SESSION_STATE) if spark is None else [spark]:
+        normed = session_cache(s, "normed")
+        while normed:
+            normed.popitem()[1].unpersist()
 
 
 def _topk(scored: DataFrame) -> DataFrame:
@@ -343,8 +319,6 @@ def _bucket_col() -> Column:
 #: pinned by the tests alone. Both sides of the bound compute identical
 #: rows by those pins, so the gate is purely a cost choice.
 ANN_KERNEL_BOUND = 250_000
-
-_ANN_PROBE_CACHE: dict[str, bool] = {}
 
 
 def _list_f64(col, width: int):
@@ -544,9 +518,9 @@ def _ann_kernels_ok(spark: SparkSession) -> bool:
     equality. Any mismatch disables the kernels for the session (the
     expression path is always correct); the cost is a handful of
     ~20-row jobs, paid only when the size gate would engage."""
-    tok = session_token(spark)
-    if tok in _ANN_PROBE_CACHE:
-        return _ANN_PROBE_CACHE[tok]
+    probes = session_cache(spark, "probes")
+    if "ann" in probes:
+        return probes["ann"]
     ok = True
     try:
         import math
@@ -639,7 +613,7 @@ def _ann_kernels_ok(spark: SparkSession) -> bool:
             "found a kernel/expression divergence on this platform; "
             "using the Catalyst expression renderings"
         )
-    _ANN_PROBE_CACHE[tok] = ok
+    probes["ann"] = ok
     return ok
 
 

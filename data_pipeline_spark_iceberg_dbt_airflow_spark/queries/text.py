@@ -58,21 +58,20 @@ def _toks() -> Column:
     return F.expr(_TOKS)
 
 
-#: Build the per-document profile with the Arrow kernel (default)
-#: instead of the Catalyst expression tree. The expression path stays
-#: as the reference rendering (the same formulas as the DuckDB oracle)
-#: and is pinned bit-equal to the kernel by the differential test in
-#: tests/test_llm_ops.py; flip to False to fall back. Rationale (r12,
-#: VERDICT r11 task: doc_quality is the DAG's most expensive stage at
-#: 4M): the profile's cost is spread across HOF folds (token stats,
-#: per-4gram md5 fingerprint, array_sort 2-gram run counting -- all
-#: CodegenFallback, interpreted per element) and five regexp families
-#: that each rescan the text; the kernel does ONE Python pass per doc
-#: sharing the tokenization across every family, with hashlib/re at C
-#: speed (the shingle-kernel playbook, queries/dedup.py:180). Same
-#: locale caveat as the shingle kernel: str.lower() mirrors JVM
-#: lower() only under root/en, enforced by the runtime probe.
-PROFILE_KERNEL = True
+# The per-document profile comes from the Arrow kernel whenever the
+# locale probe passes; the Catalyst expression tree stays as the
+# reference rendering (the same formulas as the DuckDB oracle), pinned
+# bit-equal to the kernel by the differential test in
+# tests/test_llm_ops.py, and the fallback when the probe fails.
+# Rationale (r12, VERDICT r11 task: doc_quality is the DAG's most
+# expensive stage at 4M): the profile's cost is spread across HOF folds
+# (token stats, per-4gram md5 fingerprint, array_sort 2-gram run
+# counting -- all CodegenFallback, interpreted per element) and five
+# regexp families that each rescan the text; the kernel does ONE Python
+# pass per doc sharing the tokenization across every family, with
+# hashlib/re at C speed (the shingle-kernel playbook, queries/dedup.py).
+# Same locale caveat as the shingle kernel: str.lower() mirrors JVM
+# lower() only under root/en, enforced by the runtime probe.
 
 #: Output column order of text_profile -- shared by both renderings and
 #: by the kernel's Arrow batch assembly. Types mirror the expression
@@ -348,14 +347,13 @@ def text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # synth_pii plants deterministic PII spans (the corpus itself is
     # PII-free word salad) so the detect/redact columns are exercised.
     docs = synth_pii(read_table(spark, sf_dir, "documents", widen=True))
-    if PROFILE_KERNEL:
-        # the kernel shares the shingle kernel's one environmental
-        # assumption (str.lower() vs JVM lower() under root/en) and its
-        # runtime guard
-        from .dedup import _kernel_locale_ok
+    # the kernel shares the shingle kernel's one environmental
+    # assumption (str.lower() vs JVM lower() under root/en) and its
+    # runtime guard
+    from .dedup import _kernel_locale_ok
 
-        if _kernel_locale_ok(spark):
-            return _profile_rows_kernel(docs)
+    if _kernel_locale_ok(spark):
+        return _profile_rows_kernel(docs)
     return _profile_rows_expr(docs)
 
 
@@ -364,8 +362,7 @@ def _profile_rows_expr(docs: DataFrame) -> DataFrame:
     text_profile body): one codegen'd scan, zero Python. Kept as the
     cross-engine reference `_profile_rows_kernel` is differenced
     against (tests/test_llm_ops.py) and as the automatic fallback on a
-    non-root/en JVM locale; not the default build path (see
-    PROFILE_KERNEL)."""
+    non-root/en JVM locale."""
     t = _toks()
     token_cnt = F.size(t)
     char_cnt = F.length("text")
@@ -913,20 +910,19 @@ def _lm_stream_kernel(
     return docs.mapInArrow(gen, "doc_id long, lp double")
 
 
-#: Engage the Arrow scoring kernel in lm_score_docs_grouped (r13,
-#: VERDICT r12 task 4). Attribution at 1M (f47a063:tools/lm_attrib.py):
-#: the scoring half's dominant term is the THREE broadcast probes over the
-#: ~59M-row bigram stream (stream 3.4s -> +joins 12.6s -> +decimal agg
-#: 13.5s), and the composed stage pays ~3 redundant corpus passes
-#: because each model-table broadcast re-runs the unigram lineage. The
-#: kernel replaces stream-explode + probes with one mapInArrow pass:
-#: Java-semantics \S+ tokenize (the profile kernel's proven regex), a
-#: per-group dict lookup of the SAME JVM-computed tier log-probs
-#: (collected once, model-sized), emitting (doc_id, lp) rows; the
-#: exact-decimal per-doc aggregation STAYS in Spark, so scores are
-#: bit-equal by construction (the differential test pins it). Flip to
-#: False to fall back to the pure-expression rendering.
-LM_SCORE_KERNEL = True
+# The Arrow scoring kernel of lm_score_docs_grouped (r13, VERDICT r12
+# task 4), engaged by the size gates below. Attribution at 1M
+# (f47a063:tools/lm_attrib.py): the scoring half's dominant term is the
+# THREE broadcast probes over the ~59M-row bigram stream (stream 3.4s ->
+# +joins 12.6s -> +decimal agg 13.5s), and the composed stage pays ~3
+# redundant corpus passes because each model-table broadcast re-runs
+# the unigram lineage. The
+# kernel replaces stream-explode + probes with one mapInArrow pass:
+# Java-semantics \S+ tokenize (the profile kernel's proven regex), a
+# per-group dict lookup of the SAME JVM-computed tier log-probs
+# (collected once, model-sized), emitting (doc_id, lp) rows; the
+# exact-decimal per-doc aggregation STAYS in Spark, so scores are
+# bit-equal by construction (the differential test pins it).
 
 #: Kernel engagement bound on collected model rows (pair + unigram
 #: tiers COMBINED, ADVICE r13): above this the per-worker dict copies
@@ -981,10 +977,10 @@ def lm_score_docs_grouped(
     w2), over the same doubles -- pinned by the grouped-vs-ungrouped
     differential test, since ``lm_score_docs`` keeps the per-row form.
 
-    r13: with the kernel engaged (default via LM_SCORE_KERNEL; long
-    doc_id, pair + unigram tiers together under LM_KERNEL_MODEL_BOUND
-    rows -- BOTH tiers are bounded, ADVICE r13 -- broadcast_model),
-    the stream explode + three probes are replaced by
+    r13: with the kernel engaged (``kernel=None`` lets the size gates
+    decide; long doc_id, pair + unigram tiers together under
+    LM_KERNEL_MODEL_BOUND rows -- BOTH tiers are bounded, ADVICE r13 --
+    broadcast_model), the stream explode + three probes are replaced by
     :func:`_lm_stream_kernel` -- one mapInArrow pass doing dict lookups
     of the SAME JVM-computed tier values; the exact-decimal per-doc
     aggregate stays in Spark either way, so scores are bit-equal across
@@ -1059,10 +1055,7 @@ def lm_score_docs_grouped(
         ).alias("lp_oov"),
     )
     use_kernel = (
-        (
-            LM_SCORE_KERNEL
-            and (corpus_rows is None or corpus_rows >= LM_KERNEL_MIN_DOCS)
-        )
+        (corpus_rows is None or corpus_rows >= LM_KERNEL_MIN_DOCS)
         if kernel is None
         else kernel
     )

@@ -197,15 +197,13 @@ def test_ann_kernels_gate_respects_probe(spark, sf_dir, monkeypatch):
     """A failed runtime equality probe must route the family through
     the expression path (no Python eval nodes in the plan) even when
     the size gate asks for kernels."""
-    from data_pipeline_spark_iceberg_dbt_airflow_spark.io import (
-        session_token,
-    )
+    from data_pipeline_spark_iceberg_dbt_airflow_spark.io import session_cache
 
     monkeypatch.setattr(S, "ANN_KERNEL_BOUND", -1)
-    tok = session_token(spark)
-    prior = S._ANN_PROBE_CACHE.get(tok)
+    probes = session_cache(spark, "probes")
+    prior = probes.get("ann")
     try:
-        S._ANN_PROBE_CACHE[tok] = False
+        probes["ann"] = False
         plan = (
             S.sim_ann_family(spark, sf_dir)
             ._jdf.queryExecution()
@@ -216,9 +214,9 @@ def test_ann_kernels_gate_respects_probe(spark, sf_dir, monkeypatch):
             assert node not in plan, node
     finally:
         if prior is None:
-            S._ANN_PROBE_CACHE.pop(tok, None)
+            probes.pop("ann", None)
         else:
-            S._ANN_PROBE_CACHE[tok] = prior
+            probes["ann"] = prior
     # and with a passing probe the kernels appear at forced-kernel scale
     if S._ann_kernels_ok(spark):
         plan = (
@@ -237,11 +235,9 @@ def test_ann_kernels_gate_respects_probe(spark, sf_dir, monkeypatch):
 def test_ann_probe_passes_here(spark):
     """The runtime FP equality probe must pass on this platform (it is
     the belt to the differential tests' braces)."""
-    from data_pipeline_spark_iceberg_dbt_airflow_spark.io import (
-        session_token,
-    )
+    from data_pipeline_spark_iceberg_dbt_airflow_spark.io import session_cache
 
-    S._ANN_PROBE_CACHE.pop(session_token(spark), None)
+    session_cache(spark, "probes").pop("ann", None)
     assert S._ann_kernels_ok(spark) is True
 
 

@@ -437,11 +437,13 @@ def test_shingle_kernel_locale_guard(spark, tmp_path_factory, monkeypatch):
     def boom(docs):
         raise AssertionError("kernel must not engage under this locale")
 
-    # simulated Turkish deployment: kernel path must not be touched
+    # simulated Turkish deployment: kernel path must not be touched, and
+    # the fallback says so
     monkeypatch.setattr(dedup, "_kernel_locale_ok", lambda s: False)
     monkeypatch.setattr(dedup, "_shingle_rows_kernel", boom)
     try:
-        assert shingled_docs(spark, str(sf)).count() > 0
+        with pytest.warns(UserWarning, match="shingle kernel disabled"):
+            assert shingled_docs(spark, str(sf)).count() > 0
     finally:
         release_shingle_index(spark)
     monkeypatch.undo()
@@ -463,22 +465,20 @@ def test_locale_probe_is_behavioral(spark, monkeypatch):
     """r13 (ADVICE r12): the guard now evaluates Catalyst's lower() on
     an executor and compares it against Python's str.lower(), instead
     of reading the DRIVER JVM's locale name. Pins: (a) the verdict is
-    cached per session token, (b) a lowercase divergence on the probe
+    cached per session, (b) a lowercase divergence on the probe
     string is detected, (c) an unprobeable session falls back to
     False (expression path)."""
-    from data_pipeline_spark_iceberg_dbt_airflow_spark.io import (
-        session_token,
-    )
+    from data_pipeline_spark_iceberg_dbt_airflow_spark.io import session_cache
 
-    tok = session_token(spark)
+    probes = session_cache(spark, "probes")
     # (a) probe once, verdict lands in the cache; a poisoned cache
     # entry is believed (proving the tiny job runs once per session)
-    dedup._LOCALE_PROBE_CACHE.pop(tok, None)
+    probes.pop("locale", None)
     assert dedup._kernel_locale_ok(spark) is True
-    assert dedup._LOCALE_PROBE_CACHE[tok] is True
-    dedup._LOCALE_PROBE_CACHE[tok] = False
+    assert probes["locale"] is True
+    probes["locale"] = False
     assert dedup._kernel_locale_ok(spark) is False
-    dedup._LOCALE_PROBE_CACHE.pop(tok, None)
+    probes.pop("locale", None)
 
     # (b) a probe string whose Python lower() disagrees with what the
     # executor JVM computes must fail the guard -- this exercises the
@@ -493,7 +493,7 @@ def test_locale_probe_is_behavioral(spark, monkeypatch):
     )
     assert dedup._kernel_locale_ok(spark) is False
     monkeypatch.undo()
-    dedup._LOCALE_PROBE_CACHE.pop(tok, None)
+    probes.pop("locale", None)
 
     # (c) unprobeable session (job submission raises) -> False
     monkeypatch.setattr(
@@ -504,7 +504,7 @@ def test_locale_probe_is_behavioral(spark, monkeypatch):
     )
     assert dedup._kernel_locale_ok(spark) is False
     monkeypatch.undo()
-    dedup._LOCALE_PROBE_CACHE.pop(tok, None)
+    probes.pop("locale", None)
     assert dedup._kernel_locale_ok(spark) is True
 
 

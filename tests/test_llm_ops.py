@@ -1405,44 +1405,31 @@ def test_containment_on_fixture_corpus(spark, sf_dir):
         assert r["contained_doc"] in (r["doc_a"], r["doc_b"])
 
 
-def test_normed_cache_evicts_on_wrapper_finalize(spark, sf_dir):
-    """The similarity normed-corpus pin must not outlive its session:
-    io's finalizer purges it when the wrapper keyed to a token is
-    garbage-collected, and release_normed_corpus clears live entries."""
-    import gc
-    import weakref
-
-    from data_pipeline_spark_iceberg_dbt_airflow_spark import io as io_mod
+def test_normed_cache_releases_live_entries(spark, sf_dir):
+    """release_normed_corpus clears (and unpersists) a live session's
+    normed-corpus pin, and a later build pins a fresh one; called with
+    no session it releases every live session's pins."""
+    from data_pipeline_spark_iceberg_dbt_airflow_spark.io import session_cache
     from data_pipeline_spark_iceberg_dbt_airflow_spark.queries import (
         similarity as sim,
     )
 
     # live-session path: populate, then release explicitly
-    sim._normed(spark, sf_dir)
-    live_tok = io_mod.session_token(spark)
-    assert any(k[0] == live_tok for k in sim._NORMED_CACHE)
+    df = sim._normed(spark, sf_dir)
+    assert df.is_cached and sf_dir in session_cache(spark, "normed")
     sim.release_normed_corpus(spark)
-    assert not any(k[0] == live_tok for k in sim._NORMED_CACHE)
+    assert not session_cache(spark, "normed")
+    assert not df.is_cached
+    fresh = sim._normed(spark, sf_dir)
+    assert fresh is not df and fresh is sim._normed(spark, sf_dir)
 
-    # dead-wrapper path: a fake entry keyed by a synthetic token is
-    # dropped when the finalizer fires (exactly what session_token
-    # registers for real wrappers); unpersist failures are swallowed
-    class _Dead:
-        pass
-
-    class _Stub:  # stands in for a persisted DataFrame of a dead session
-        def unpersist(self):
-            raise RuntimeError("context stopped")
-
-    tok = "app-dead:0"
-    sim._NORMED_CACHE[(tok, "/nowhere")] = _Stub()
-    holder = _Dead()
-    weakref.finalize(holder, io_mod._purge_scan_cache, tok)
-    del holder
-    gc.collect()
-    assert (tok, "/nowhere") not in sim._NORMED_CACHE
-    # live session untouched by the dead token's purge
-    assert sim._normed(spark, sf_dir) is sim._normed(spark, sf_dir)
+    s2 = spark.newSession()
+    other = sim._normed(s2, sf_dir)
+    assert other is not fresh and other.is_cached
+    sim.release_normed_corpus()
+    for sess, pin in ((spark, fresh), (s2, other)):
+        assert not session_cache(sess, "normed")
+        assert not pin.is_cached
 
 
 def test_grouped_lm_zero_count_c1_does_not_raise(spark):

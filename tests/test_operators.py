@@ -181,40 +181,27 @@ def test_read_table_memoizes_scan_per_session(spark, sf_dir):
     assert c is not a and "n_nationkey" in c.columns
 
 
-def test_scan_cache_cannot_alias_recycled_session_ids(spark):
-    """Cache keys are session-LIFETIME tokens, not id(spark): a new session
-    occupying a dead session's CPython id must not be served the dead
-    session's cached plans, and a collected session's entries are purged
-    (round-3 advisor finding). Simulated with duck-typed sessions so the
-    id-reuse scenario is deterministic rather than allocator luck."""
-    import gc
+def test_new_session_gets_its_own_scans_and_views(spark, sf_dir):
+    """``spark.newSession()`` shares the SparkContext but has its own conf
+    and temp views (one session per Thrift-server connection), so the
+    per-session caches must not hand it the parent's frames: a frame
+    bound to the parent would register its views in the parent."""
+    from data_pipeline_spark_iceberg_dbt_airflow_spark.io import (
+        read_table,
+        register_views,
+    )
 
-    from data_pipeline_spark_iceberg_dbt_airflow_spark import io as io_mod
-
-    class _FakeSC:
-        def __init__(self, app_id, start):
-            self.applicationId, self.startTime = app_id, start
-
-    class _FakeSession:
-        def __init__(self, app_id, start):
-            self.sparkContext = _FakeSC(app_id, start)
-
-    dead = _FakeSession("local-1111", 1)
-    tok_dead = io_mod.session_token(dead)
-    sentinel = object()
-    io_mod._SCAN_CACHE[(tok_dead, "/fake/path")] = sentinel
-    dead_id = id(dead)
-    del dead
-    gc.collect()
-    # Finalizer purged the dead session's entries...
-    assert (tok_dead, "/fake/path") not in io_mod._SCAN_CACHE
-    # ...and even a new session landing on the SAME id() gets a different
-    # token, so it could never have aliased them anyway.
-    reborn = _FakeSession("local-2222", 2)
-    assert io_mod.session_token(reborn) != tok_dead
-    del dead_id, reborn
-    # The real session's token is stable across calls (memoized weakly).
-    assert io_mod.session_token(spark) == io_mod.session_token(spark)
+    warm = read_table(spark, sf_dir, "events")
+    s2 = spark.newSession()
+    ev2 = read_table(s2, sf_dir, "events")
+    assert ev2.sparkSession is s2
+    assert read_table(s2, sf_dir, "events") is ev2
+    assert read_table(s2, sf_dir, "events", widen=True).sparkSession is s2
+    register_views(s2, sf_dir, ("events",))
+    n = s2.sql("SELECT COUNT(*) AS n FROM events").head()["n"]
+    assert n == warm.count() > 0
+    # the parent's warm scan is untouched
+    assert read_table(spark, sf_dir, "events") is warm
 
 
 # --- round 4: UDAF / grouped-map / cogrouped-map / UDTF tiers ---------------

@@ -81,25 +81,21 @@ def test_span_kernel_matches_expr_on_adversarial_rows(spark):
     _assert_equal(docs)
 
 
-def test_mask_repeated_spans_identical_under_kernel_flag(
-    spark, sf_dir, monkeypatch
-):
+def test_mask_repeated_spans_identical_under_kernel_flag(spark, sf_dir):
     """The full operator (frequent table, keep-first exemption,
     interval merge, rewrite) must produce identical rows whichever occ
-    path feeds it -- the guarantee that flipping SPAN_KERNEL can never
-    move the dedup_span_mask oracle hash."""
+    path feeds it -- the guarantee that the size gate's ``kernel``
+    choice can never move the dedup_span_mask oracle hash."""
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def run():
+    def run(kernel):
         return sorted(
             (r["doc_id"], r["text"], r["masked_tokens"], r["n_spans"])
-            for r in dedup.mask_repeated_spans(docs).collect()
+            for r in dedup.mask_repeated_spans(docs, kernel=kernel).collect()
         )
 
-    monkeypatch.setattr(dedup, "SPAN_KERNEL", False)
-    expr_rows = run()
-    monkeypatch.setattr(dedup, "SPAN_KERNEL", True)
-    kern_rows = run()
+    expr_rows = run(False)
+    kern_rows = run(True)
     assert kern_rows == expr_rows
     assert any(r[2] > 0 for r in expr_rows)  # the corpus has repeats
 
@@ -107,13 +103,13 @@ def test_mask_repeated_spans_identical_under_kernel_flag(
 def test_span_kernel_engages_only_with_locale_ok(spark, sf_dir):
     """A failed locale probe must route mask_repeated_spans through the
     expression path (plan carries Generate/posexplode, no MapInArrow)."""
-    from data_pipeline_spark_iceberg_dbt_airflow_spark.io import session_token
+    from data_pipeline_spark_iceberg_dbt_airflow_spark.io import session_cache
 
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    tok = session_token(spark)
-    prior = dedup._LOCALE_PROBE_CACHE.get(tok)
+    probes = session_cache(spark, "probes")
+    prior = probes.get("locale")
     try:
-        dedup._LOCALE_PROBE_CACHE[tok] = False
+        probes["locale"] = False
         plan = (
             dedup.mask_repeated_spans(docs)
             ._jdf.queryExecution()
@@ -123,9 +119,9 @@ def test_span_kernel_engages_only_with_locale_ok(spark, sf_dir):
         assert "MapInArrow" not in plan, plan
     finally:
         if prior is None:
-            dedup._LOCALE_PROBE_CACHE.pop(tok, None)
+            probes.pop("locale", None)
         else:
-            dedup._LOCALE_PROBE_CACHE[tok] = prior
+            probes["locale"] = prior
     plan = (
         dedup.mask_repeated_spans(docs)
         ._jdf.queryExecution()
