@@ -45,8 +45,11 @@ def band_of(n_chars: int | None) -> str | None:
 
 
 def band_udf() -> Column:
-    """X1: row UDF. Built per-call (PySpark 4 resolves types eagerly)."""
-    return F.udf(band_of, "string")(F.col("n_chars"))
+    """X1: row UDF. Built per-call (PySpark 4 resolves types eagerly).
+    ``useArrow=False`` pins the pickled row eval type (``BatchEvalPython``
+    in the plan): left unset, PySpark tries to infer an eval type from
+    ``band_of``'s ``int | None`` hints, cannot, and warns."""
+    return F.udf(band_of, "string", useArrow=False)(F.col("n_chars"))
 
 
 def band_pandas_udf() -> Column:

@@ -7,10 +7,22 @@ suite is empty (SURVEY.md §5 caveat). This module implements the four
 canonical dbt checks its models imply -- not_null, unique,
 accepted_values, relationships -- natively over DataFrames.
 
-Each check compiles to ONE aggregate or anti-join returning a failing-row
-count -- the same single-pass shape dbt's generated test SQL has, and the
-only shape that scales: a check never collects rows, only a count (a
-debugging variant could limit-sample the failures).
+Each check returns a failing-row count and never collects rows. At
+this scale a check costs Spark jobs, not bytes, so each is compiled to
+the fewest jobs its shape allows:
+
+- ``not_null`` on the unmodified frame ``snapshots.snapshot_read``
+  returned: 0 jobs, the manifest's NULL counts answer it
+  (``snapshots.read_null_counts``), as Iceberg and Delta answer counts
+  from their manifests. On any other frame it is a row-local count.
+- Row-local counts (``not_null`` on a scan, ``accepted_values``,
+  ``expression``): 1 job with no exchange, the RDD count of the filtered
+  plan. ``DataFrame.count`` would add a final aggregate whose exchange
+  is a second job under AQE.
+- ``unique``: 2 jobs, the grouped frame's exchange and one pass over the
+  groups, whose excess an ``observe`` sums into a ``noop`` write.
+- ``relationships``: an anti-join counted like a row-local count, so 2
+  jobs when the parent broadcasts (its collect, then the probe).
 """
 
 from __future__ import annotations
@@ -18,8 +30,10 @@ from __future__ import annotations
 from collections.abc import Sequence
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+from ..snapshots import read_null_counts
 
 
 @dataclass(frozen=True)
@@ -34,26 +48,45 @@ class CheckResult:
         return f"{self.check}({self.column}): {status}"
 
 
+def _count(df: DataFrame) -> int:
+    """Rows of ``df``: the RDD count of its physical plan, projected to no
+    column. One Spark job per query stage of the plan, so one for a plan
+    with no exchange, where ``DataFrame.count`` adds a final aggregate
+    whose exchange is a second job."""
+    return df.select()._jdf.queryExecution().toRdd().count()
+
+
 def not_null(df: DataFrame, column: str) -> CheckResult:
     """dbt ``not_null``: no NULLs in ``column``."""
-    n = df.where(F.col(column).isNull()).count()
+    nulls = read_null_counts(df) or {}
+    # Spark parses a dotted or quoted name as a path, not as the
+    # top-level column of that name the counts are keyed by
+    if column in nulls and "." not in column and "`" not in column:
+        n = nulls[column]
+    else:
+        n = _count(df.where(F.col(column).isNull()))
     return CheckResult("not_null", column, n == 0, n)
 
 
 def unique(df: DataFrame, column: str) -> CheckResult:
     """dbt ``unique``: no value occurs twice (NULLs ignored, as dbt does).
 
-    Counted as sum of (occurrences - 1) over duplicated values: one
-    map-side-combinable groupBy on the column, no full-row shuffle.
+    Counted as sum of (occurrences - 1) over the values: one
+    map-side-combinable groupBy on the column, no full-row shuffle, and
+    the sum is observed on the groups as they stream into a ``noop``
+    sink rather than reduced by a second exchange.
     """
-    dup = (
+    obs = Observation()
+    (
         df.where(F.col(column).isNotNull())
         .groupBy(column)
         .agg(F.count(F.lit(1)).alias("c"))
-        .where(F.col("c") > 1)
-        .agg(F.coalesce(F.sum(F.col("c") - 1), F.lit(0)).alias("extra"))
-        .collect()[0]["extra"]
+        .observe(obs, F.coalesce(F.sum(F.col("c") - 1), F.lit(0)).alias("extra"))
+        .write.format("noop")
+        .mode("overwrite")
+        .save()
     )
+    dup = obs.get["extra"]
     return CheckResult("unique", column, dup == 0, int(dup))
 
 
@@ -65,10 +98,8 @@ def accepted_values(
     The canonical instance here: data_source in {coingecko, coincap,
     blockchain_info} (extract_bitcoin_prices.py:56,81,104).
     """
-    n = (
-        df.where(F.col(column).isNotNull())
-        .where(~F.col(column).isin(*values))
-        .count()
+    n = _count(
+        df.where(F.col(column).isNotNull()).where(~F.col(column).isin(*values))
     )
     return CheckResult("accepted_values", column, n == 0, n)
 
@@ -78,13 +109,13 @@ def relationships(
 ) -> CheckResult:
     """dbt ``relationships``: every non-NULL value exists in the parent
     table -- a LEFT ANTI join (probe side never shuffles when the parent
-    key set broadcasts)."""
-    parent = ref_df.select(F.col(ref_column).alias(column)).distinct()
-    n = (
+    key set broadcasts). The parent is not made distinct first: dbt's
+    test SQL does not, and duplicate keys change no anti-join result."""
+    parent = ref_df.select(F.col(ref_column).alias(column))
+    n = _count(
         df.where(F.col(column).isNotNull())
         .select(column)
         .join(parent, column, "left_anti")
-        .count()
     )
     return CheckResult("relationships", column, n == 0, n)
 
@@ -94,8 +125,8 @@ def expression(df: DataFrame, expr: str) -> CheckResult:
     predicate (e.g. ``"o_totalprice >= 0"``). NULL predicates count as
     failures -- a constraint a row cannot prove is a constraint it
     fails, matching dbt's generated ``WHERE NOT (expr)`` plus explicit
-    NULL handling. Same one-aggregate shape as the other checks."""
-    n = df.where(~F.coalesce(F.expr(expr), F.lit(False))).count()
+    NULL handling. A row-local count, like ``accepted_values``."""
+    n = _count(df.where(~F.coalesce(F.expr(expr), F.lit(False))))
     return CheckResult("expression", expr, n == 0, n)
 
 

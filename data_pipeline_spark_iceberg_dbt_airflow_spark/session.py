@@ -58,6 +58,14 @@ def get_spark_session(
 
     ``driver_memory`` only takes effect for the FIRST session in the process
     (the JVM is already up on ``getOrCreate`` reuse); a mismatch warns.
+
+    DataFrame debugging (``spark.python.sql.dataFrameDebugging.enabled``)
+    is off: with it on, every ``F.*`` or Column call captures the Python
+    stack and pays about five more py4j round trips, which doubled the
+    py4j calls of an hourly ELT cycle. PySpark reads the flag once per
+    process, on the first Column call, so it is set in the builder. The
+    cost: Spark error messages lose the Python call-site fragment
+    (nothing in this package reads it).
     """
     cpus = default_parallelism()
     active = SparkSession.getActiveSession()
@@ -80,6 +88,7 @@ def get_spark_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # Scan-split sizing: maxSplitBytes = min(maxPartitionBytes,
         # max(openCostInBytes, totalBytes/parallelism)). The 4 MiB default
         # openCost caps a 10 MiB fact table at ~3 scan tasks on 32 cores;

@@ -29,14 +29,18 @@ format design (the mechanism Iceberg/Delta themselves use):
   under wall-clock steps.
 - Every manifest also carries a snapshot SUMMARY, the metadata an
   Iceberg manifest list keeps: ``schemas`` (the distinct live schemas,
-  oldest first), ``rows`` (the snapshot's total row count) and
-  ``stats`` (column -> [min, max] of every integer, floating-point,
-  date and timestamp column, in Spark's internal form). The data write carries a
-  ``df.observe`` of those aggregates, so the summary costs no extra
-  Spark job. Append merges the new commit's summary into the parent's;
+  oldest first), ``rows`` (the snapshot's total row count), ``stats``
+  (column -> [min, max] of every integer, floating-point, date and
+  timestamp column, in Spark's internal form) and ``nulls`` (top-level
+  column -> NULL count, Iceberg's ``null_value_counts``). The data
+  write carries a ``df.observe`` of those aggregates, so the summary
+  costs no extra Spark job. Append merges the new commit's summary
+  into the parent's (``nulls`` summed over the columns both hold);
   overwrite and merge take the new commit's; rollback copies the
   target's. The summary stays O(1) per manifest: it never lists
-  per-directory facts.
+  per-directory facts. The frame ``snapshot_read`` returns carries its
+  snapshot's ``nulls`` (``read_null_counts``) while the snapshot has one
+  live schema, so a NULL count of that unmodified frame runs no job.
 - Reading snapshot N = ``spark.read.schema(recorded).parquet(
   *live_dirs)``: plans, pushdown, and pruning are ordinary parquet
   scans, and passing the recorded schema spares the footer-inference
@@ -77,9 +81,10 @@ import json
 import os
 import time
 import uuid
+import weakref
 from functools import reduce
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -233,24 +238,30 @@ def _as_nullable(dtype: DataType) -> DataType:
     return dtype
 
 
+def _col(name: str) -> Column:
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
 def _observed(df: DataFrame) -> tuple[DataFrame, Observation, list]:
-    """``df`` with an observation of its row count and the min and max of
-    every ``STAT_TYPES`` column. The metrics ride the data write's own
-    job: no extra Spark job."""
+    """``df`` with an observation of its row count, the non-NULL count of
+    every top-level column and the min and max of every ``STAT_TYPES``
+    column. The metrics ride the data write's own job: no extra Spark
+    job."""
     obs = Observation()
     fields = [f for f in df.schema.fields if isinstance(f.dataType, STAT_TYPES)]
     exprs = [F.count(F.lit(1)).alias("rows")]
     for i, f in enumerate(fields):
-        col = F.col("`" + f.name.replace("`", "``") + "`")
+        col = _col(f.name)
         exprs += [F.min(col).alias(f"min{i}"), F.max(col).alias(f"max{i}")]
+    exprs += [F.count(_col(n)).alias(f"n{j}") for j, n in enumerate(df.columns)]
     return df.observe(obs, *exprs), obs, fields
 
 
 def _summary(df: DataFrame, obs: Observation, fields: list) -> dict:
     """One commit's snapshot summary from its written frame and metrics:
-    ``schemas`` (its schema as stored), ``rows`` and ``stats`` (column ->
+    ``schemas`` (its schema as stored), ``rows``, ``stats`` (column ->
     [min, max] in Spark's internal form; [None, None] when the column
-    holds no value)."""
+    holds no value) and ``nulls`` (column -> NULL count)."""
     got = obs.get
     return {
         "schemas": [_as_nullable(df.schema).jsonValue()],
@@ -262,11 +273,15 @@ def _summary(df: DataFrame, obs: Observation, fields: list) -> dict:
             ]
             for i, f in enumerate(fields)
         },
+        "nulls": {n: got["rows"] - got[f"n{j}"] for j, n in enumerate(df.columns)},
     }
 
 
 def _summary_of(m: dict) -> dict:
-    return {k: m[k] for k in ("schemas", "rows", "stats")}
+    """A manifest's summary; ``nulls`` only when the manifest has it (a
+    manifest written before it existed does not)."""
+    keys = ("schemas", "rows", "stats") + (("nulls",) if "nulls" in m else ())
+    return {k: m[k] for k in keys}
 
 
 def _field_types(schemas: list[dict]) -> dict[str, DataType]:
@@ -288,7 +303,9 @@ def _spark_order(v):
 def _append_summary(parent: dict, new: dict) -> dict:
     """The summary of parent + new as one snapshot. A column keeps stats
     only while every side holding it has them with one type: a side with
-    the column but no stats (another type) makes its range unknown."""
+    the column but no stats (another type) makes its range unknown. A
+    column keeps its NULL count only while both sides hold it, and the
+    summary keeps ``nulls`` only while both sides have them."""
     ptypes = _field_types(parent["schemas"])
     ntypes = _field_types(new["schemas"])
     stats = {}
@@ -309,12 +326,16 @@ def _append_summary(parent: dict, new: dict) -> dict:
             min(los, key=_spark_order) if los else None,
             max(his, key=_spark_order) if his else None,
         ]
-    return {
+    out = {
         "schemas": parent["schemas"]
         + [s for s in new["schemas"] if s not in parent["schemas"]],
         "rows": parent["rows"] + new["rows"],
         "stats": stats,
     }
+    if "nulls" in parent and "nulls" in new:
+        pn = parent["nulls"]
+        out["nulls"] = {c: pn[c] + n for c, n in new["nulls"].items() if c in pn}
+    return out
 
 
 def _commit(
@@ -551,10 +572,12 @@ def snapshot_summary(
 ) -> dict:
     """What the manifest knows about a snapshot (picked as in
     ``snapshot_read``), decoded, with no Spark job: ``version``,
-    ``rows``, ``schemas`` (the distinct live schemas, oldest first) and
+    ``rows``, ``schemas`` (the distinct live schemas, oldest first),
     ``stats``, column -> (min, max) as ``collect()`` returns them, for
-    every ``STAT_TYPES`` column; (None, None) when the column holds no
-    value."""
+    every ``STAT_TYPES`` column ((None, None) when the column holds no
+    value), and ``nulls``, top-level column -> NULL count for every
+    column each live commit holds (None when the manifest predates
+    NULL counts)."""
     m = _pick(table_dir, version, as_of_ns)
     types = _field_types(m["schemas"])
     return {
@@ -565,6 +588,7 @@ def snapshot_summary(
             name: tuple(types[name].fromInternal(v) for v in bounds)
             for name, bounds in m["stats"].items()
         },
+        "nulls": m.get("nulls"),
     }
 
 
@@ -591,6 +615,11 @@ def _merge_schemas(a: StructType, b: StructType) -> StructType:
     return StructType(fields + [g for g in b.fields if g.name not in ours])
 
 
+#: frame -> NULL counts of the snapshot it reads, for the frames
+#: ``snapshot_read`` returned; a derived frame is another object
+_READ_NULLS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
 def snapshot_read(
     spark: SparkSession,
     table_dir: str,
@@ -610,11 +639,25 @@ def snapshot_read(
     is then the union of the live schemas, merged as Parquet
     ``mergeSchema`` merges them but oldest first rather than in path
     order, so columns added later read as NULL for older directories
-    (the same union-by-name posture as ``io.read_evolving``)."""
+    (the same union-by-name posture as ``io.read_evolving``). While the
+    snapshot has one live schema, the returned frame carries the
+    manifest's NULL counts (``read_null_counts``)."""
     picked = _pick(table_dir, version, as_of_ns)
     schemas = [StructType.fromJson(s) for s in picked["schemas"]]
     schema = reduce(_merge_schemas, schemas) if merge_schema else schemas[0]
-    return spark.read.schema(schema).parquet(*_live_paths(table_dir, picked))
+    df = spark.read.schema(schema).parquet(*_live_paths(table_dir, picked))
+    if len(schemas) == 1 and "nulls" in picked:
+        _READ_NULLS[df] = picked["nulls"]
+    return df
+
+
+def read_null_counts(df: DataFrame) -> dict[str, int] | None:
+    """Top-level column -> NULL count of ``df`` when it is a frame
+    ``snapshot_read`` returned, unmodified, over a snapshot with one live
+    schema whose manifest records NULL counts; otherwise None. With one
+    schema every live commit holds every column, so the manifest's sums
+    are exactly what a scan of the frame would count."""
+    return _READ_NULLS.get(df)
 
 
 def snapshot_merge(
