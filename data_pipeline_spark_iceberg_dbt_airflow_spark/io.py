@@ -22,9 +22,10 @@ key drops them with it), so no finalizer is needed. A cached frame holds
 its wrapper (``df.sparkSession``), so a session that has read a table
 through ``read_table`` keeps its wrapper, and with it its entries, until
 the process exits. ``release_shingle_index`` and ``release_normed_corpus``
-unpersist and drop the large persisted frames; the scans they leave are
-plans, not data. A session that only cached probe verdicts is let go
-with its wrapper.
+unpersist and drop the large persisted frames through ``release_frame``,
+which leaves a plan persisted while another live session still pins it;
+the scans they leave are plans, not data. A session that only cached
+probe verdicts is let go with its wrapper.
 """
 
 from __future__ import annotations
@@ -234,6 +235,48 @@ SESSION_STATE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 def session_cache(spark: SparkSession, name: str) -> dict:
     """The dict ``name`` of ``spark``'s state, created empty on first use."""
     return SESSION_STATE.setdefault(spark, {}).setdefault(name, {})
+
+
+def release_frame(spark: SparkSession, name: str, key) -> None:
+    """Drop ``key`` from the cache ``name`` of ``spark`` and unpersist its
+    frame, unless another live session still pins the same plan.
+
+    Spark's CacheManager is shared by every session of a SparkContext, so
+    unpersisting a plan also drops any other session's pin of it. A frame
+    is therefore left persisted while another live session holds a frame
+    of the same plan under the same key; the last session to release it
+    unpersists it.
+    """
+    df = session_cache(spark, name).pop(key, None)
+    if df is not None:
+        _unpersist_unless_pinned(spark, name, key, df)
+
+
+def release_frames(spark: SparkSession | None, name: str) -> None:
+    """:func:`release_frame` every entry of the cache ``name`` of ``spark``
+    (of every live session when None: all entries are dropped before any
+    is unpersisted, so every frame is unpersisted)."""
+    popped = []
+    for s in list(SESSION_STATE) if spark is None else [spark]:
+        cache = session_cache(s, name)
+        popped += [(s, key, cache.pop(key)) for key in list(cache)]
+    for s, key, df in popped:
+        _unpersist_unless_pinned(s, name, key, df)
+
+
+def _unpersist_unless_pinned(
+    spark: SparkSession, name: str, key, df: DataFrame
+) -> None:
+    for other, state in list(SESSION_STATE.items()):
+        held = state.get(name, {}).get(key)
+        if other is not spark and held is not None and held.sameSemantics(df):
+            return
+    try:
+        df.unpersist()
+    except Exception:
+        # a table-backed frame (dedup.materialize_shingle_index) has
+        # nothing to unpersist; dropping the entry is the whole release
+        pass
 
 
 #: The session's "scan" cache holds three shapes per testdata table:

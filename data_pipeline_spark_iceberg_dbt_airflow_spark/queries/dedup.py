@@ -59,7 +59,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import SESSION_STATE, read_table, session_cache, table_row_count
+from ..io import (
+    SESSION_STATE,
+    read_table,
+    release_frame,
+    release_frames,
+    session_cache,
+    table_row_count,
+)
 from ..operators.graph import connected_components
 from .registry import register
 
@@ -518,19 +525,11 @@ def _index_lineage(
 
 def release_shingle_index(spark: SparkSession | None = None) -> None:
     """Unpersist cached shingle indexes (every live session's, or one
-    session's)."""
+    session's); an index another live session still pins stays cached
+    (see :func:`io.release_frame`)."""
+    for name in ("shingle_index", "shingle_raw"):
+        release_frames(spark, name)
     for s in list(SESSION_STATE) if spark is None else [spark]:
-        for name in ("shingle_index", "shingle_raw"):
-            cache = session_cache(s, name)
-            while cache:
-                df = cache.popitem()[1]
-                try:
-                    df.unpersist()
-                except Exception:
-                    # a table-backed index (materialize_shingle_index)
-                    # has nothing to unpersist; dropping the cache
-                    # entry is the whole release
-                    pass
         session_cache(s, "shingle_table").clear()
 
 
@@ -622,9 +621,8 @@ def materialize_shingle_index(
         # the memory tiers
         idx = shingled_docs(spark, sf_dir)
         write_bucketed(idx, table, "doc_id", bucket_count, sort=True)
-        for cache in (index, raws):
-            if sf_dir in cache:
-                cache.pop(sf_dir).unpersist()
+        for name in ("shingle_index", "shingle_raw"):
+            release_frame(spark, name, sf_dir)
     metas[sf_dir] = (table, bucket_count)
     # BARE table scan, deliberately un-persisted (r13, measured BOTH
     # ways at 4M): persisting the scan pinned ~231M rows of cache

@@ -53,7 +53,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.lits import array_lit
-from ..io import SESSION_STATE, read_table, session_cache, table_row_count
+from ..io import read_table, release_frames, session_cache, table_row_count
 from .registry import register
 
 #: Query batch: the first QUERY_N vectors by vec_id.
@@ -167,11 +167,9 @@ def _normed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def release_normed_corpus(spark: SparkSession | None = None) -> None:
     """Unpersist cached normed corpora (every live session's, or one
-    session's)."""
-    for s in list(SESSION_STATE) if spark is None else [spark]:
-        normed = session_cache(s, "normed")
-        while normed:
-            normed.popitem()[1].unpersist()
+    session's); a corpus another live session still pins stays cached
+    (see :func:`io.release_frame`)."""
+    release_frames(spark, "normed")
 
 
 def _topk(scored: DataFrame) -> DataFrame:

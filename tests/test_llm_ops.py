@@ -1432,6 +1432,38 @@ def test_normed_cache_releases_live_entries(spark, sf_dir):
         assert not pin.is_cached
 
 
+def _cache_manager_holds(spark, df) -> bool:
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    return cm.lookupCachedData(df._jdf).isDefined()
+
+
+def test_release_keeps_other_sessions_pin(spark, sf_dir):
+    """Spark's CacheManager is shared by every session of a SparkContext,
+    so two sessions' persisted normed corpora (and shingle indexes) of
+    one sf_dir are one cache entry. Releasing one session leaves the
+    other's plan cached; the last release unpersists it."""
+    from data_pipeline_spark_iceberg_dbt_airflow_spark.queries import (
+        dedup,
+    )
+    from data_pipeline_spark_iceberg_dbt_airflow_spark.queries import (
+        similarity as sim,
+    )
+
+    s2 = spark.newSession()
+    for build, release in (
+        (sim._normed, sim.release_normed_corpus),
+        (dedup.shingled_docs, dedup.release_shingle_index),
+    ):
+        mine, other = build(spark, sf_dir), build(s2, sf_dir)
+        assert mine is not other
+        assert _cache_manager_holds(spark, other)
+        release(spark)
+        assert _cache_manager_holds(s2, other), release.__name__
+        release(s2)
+        assert not _cache_manager_holds(s2, other), release.__name__
+        assert not _cache_manager_holds(spark, mine), release.__name__
+
+
 def test_grouped_lm_zero_count_c1_does_not_raise(spark):
     """ADVICE r10: the grouped scorer precomputes tier-1 log-probs over
     EVERY bi-model row, so an inconsistent caller-supplied model with a
