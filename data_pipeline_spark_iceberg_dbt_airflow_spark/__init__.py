@@ -8,7 +8,9 @@ full Spark SQL capability envelope it exposes through spark-sql / Thrift --
 as an idiomatic PySpark library:
 
 - ``session``   : SparkSession factory (local dev; cluster-ready configs)
-- ``io``        : table readers/writers (Parquet default, Iceberg when available)
+- ``io``        : table readers, file sources and catalog DDL (plain Parquet)
+- ``snapshots`` : the table format: append/overwrite/merge commits, snapshot
+                  listing and time travel over Parquet (the Iceberg role)
 - ``sources``   : batch ingestion (pluggable HTTP-style fetchers, failure
                   isolation, single-batch-timestamp semantics)
 - ``plans``     : dbt-style model transforms + a topological pipeline runner
@@ -22,8 +24,10 @@ as an idiomatic PySpark library:
 
 Everything is DataFrame/SQL-first: logical plans are declared declaratively
 and Catalyst/Tungsten pick the physical strategy. Python UDFs appear only
-where built-ins genuinely cannot express the semantics, and then always as
-Arrow-vectorized pandas UDFs.
+where built-ins genuinely cannot express the semantics, mostly as
+Arrow-vectorized pandas UDFs; the X1 row-UDF tier
+(``operators.udfs.band_udf``) is a pickled row UDF on purpose
+(``useArrow=False``).
 """
 
 __version__ = "0.1.0"

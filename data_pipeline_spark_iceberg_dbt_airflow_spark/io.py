@@ -1,10 +1,12 @@
-"""Table IO: readers over the driver testdata, writers with Iceberg fallback.
+"""Table IO: readers over the test data tables, file sources, and catalog DDL.
 
 The reference stores everything as Iceberg-over-Parquet
 (`/root/reference/Iceberg-dbt-project/scripts/extract_bitcoin_prices.py:131-145,193`).
-Here the default is plain Parquet (the driver testdata format, TESTDATA.md);
-``write_table`` upgrades to the Iceberg V2 writer when a catalog is present,
-reproducing the reference's append (S6) and CTAS (S8) sinks.
+Here tables are plain Parquet (the test data format, TESTDATA.md).
+The reference's append (S6) and CTAS (S8) sinks and its snapshot scan
+(S11) are ``snapshots.snapshot_append``, ``snapshot_overwrite`` and
+``snapshot_versions``/``snapshot_read``; this module holds the
+catalog-side DDL (S9, S10) and the console sink (S12).
 
 Scale notes: `spark.read.parquet` is a DataSource-V2 scan -- predicate
 pushdown, column pruning, and partition pruning are free as long as callers
@@ -312,16 +314,16 @@ def read_table(
     prune -- for those use :func:`scan_time_range`, which pushes raw-INT64
     bounds into the scan before converting.
 
-    ``widen=True`` is `widen_for_compute` with the FOOTER as the
-    parallelism signal: the table's row-group count (not the split
-    count) bounds how many tasks a parquet scan can keep busy, and
-    Spark happily cuts 32 splits of a single 450MB file whose ~4
-    row groups leave 28 of them empty. The split-count guard in
-    widen_for_compute is blind to that (measured round 8: a 1M-doc
-    single-file corpus ran every CPU-heavy per-row stage on ~4 of 32
-    cores -- text_profile 450s where the same work from a well-spread
-    frame costs ~tens of seconds). At real scale inputs arrive as many
-    files and many row groups, so the widen stays a no-op there.
+    ``widen=True`` round-robin repartitions the scan up to the session's
+    parallelism when the table's FOOTER says it would keep fewer tasks
+    busy: the row-group count (not the split count) bounds how many
+    tasks a parquet scan can keep busy, and Spark happily cuts 32 splits
+    of a single 450MB file whose ~4 row groups leave 28 of them empty
+    (measured round 8: a 1M-doc single-file corpus ran every CPU-heavy
+    per-row stage on ~4 of 32 cores -- text_profile 450s where the same
+    work from a well-spread frame costs ~tens of seconds). At real scale
+    inputs arrive as many files and many row groups, so the widen stays
+    a no-op there.
     """
     path = table_path(sf_dir, name)
     # A MISSING table is the caller's loud FileNotFoundError, exactly as
@@ -411,23 +413,6 @@ def scan_time_range(
         if hi_iso is not None:
             df = df.filter(F.col(ts_col) < F.lit(hi_iso).cast("timestamp"))
     return _normalize_ntz(df)
-
-
-def widen_for_compute(df: DataFrame, min_parts: int | None = None) -> DataFrame:
-    """Round-robin repartition a scan UP to the session's parallelism when
-    the source produced fewer splits than cores.
-
-    CPU-heavy per-row stages (tokenization, shingling, per-row hashing)
-    inherit the scan's partition count; a small table stored as one parquet
-    row group otherwise runs those stages on a single core regardless of
-    cluster size. At 100 TB inputs arrive as thousands of splits and this
-    is a no-op -- the repartition only fires when partitions < cores, so
-    it never adds a shuffle to an already well-partitioned pipeline.
-    """
-    target = min_parts or df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
-        return df
-    return df.repartition(target)
 
 
 def read_evolving(
@@ -537,41 +522,6 @@ def register_views(
         read_table(spark, sf_dir, n).createOrReplaceTempView(n)
 
 
-def write_table(
-    df: DataFrame,
-    target: str,
-    *,
-    mode: str = "append",
-    partition_by: list[str] | None = None,
-    use_iceberg: bool = False,
-) -> None:
-    """Write a table, mirroring the reference's two sinks.
-
-    - ``mode='append'`` = Iceberg append (extract_bitcoin_prices.py:193, S6)
-    - ``mode='replace'`` = dbt table materialization, i.e.
-      ``CREATE OR REPLACE TABLE ... AS SELECT`` (README.md:370,388, S8)
-
-    With ``use_iceberg`` the DataFrameWriterV2 path is used (ACID snapshot
-    commit); otherwise Parquet directories, partitioned when asked --
-    the Parquet rendering of Iceberg's hidden day partitioning (S10).
-    """
-    if use_iceberg:
-        writer = df.writeTo(target)
-        if partition_by:
-            from pyspark.sql import functions as F
-
-            writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
-        if mode == "append":
-            writer.append()
-        else:
-            writer.createOrReplace()
-        return
-    w = df.write.mode("overwrite" if mode == "replace" else mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(target)
-
-
 def write_training_shards(
     df: DataFrame,
     target: str,
@@ -620,9 +570,7 @@ def write_training_shards(
 
 def ensure_namespace(spark: SparkSession, name: str) -> None:
     """S9: idempotent namespace DDL (``CREATE NAMESPACE IF NOT EXISTS``,
-    extract_bitcoin_prices.py:128). Works against any catalog -- the
-    in-memory session catalog here, the Iceberg REST catalog in a
-    deployment with the runtime jar."""
+    extract_bitcoin_prices.py:128), against the session catalog."""
     spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {name}")
 
 
@@ -632,29 +580,17 @@ def create_table_like(
     ddl_columns: str,
     *,
     partition_by: str | None = None,
-    using: str = "parquet",
 ) -> None:
     """S10: idempotent partitioned-table DDL, the engine's rendering of
     the reference's ``CREATE TABLE IF NOT EXISTS ... USING iceberg
     PARTITIONED BY (days(extracted_at))`` (extract_bitcoin_prices.py:
-    131-145). With an Iceberg catalog pass ``using='iceberg'`` and a
-    transform like ``days(extracted_at)``; the parquet fallback partitions
-    on an explicit derived column instead (hidden partitioning is an
-    Iceberg-only feature)."""
+    131-145). The table is parquet, so it partitions on an explicit
+    derived column (e.g. ``extraction_date``) instead of a ``days(...)``
+    transform (hidden partitioning is an Iceberg-only feature)."""
     part = f" PARTITIONED BY ({partition_by})" if partition_by else ""
     spark.sql(
-        f"CREATE TABLE IF NOT EXISTS {name} ({ddl_columns}) USING {using}{part}"
+        f"CREATE TABLE IF NOT EXISTS {name} ({ddl_columns}) USING parquet{part}"
     )
-
-
-def read_snapshots(spark: SparkSession, table: str) -> DataFrame:
-    """S11: Iceberg metadata/time-travel scan
-    (``SELECT * FROM <t>.snapshots``, README.md:301,712). Requires an
-    Iceberg catalog; without the runtime jar Spark raises -- callers gate
-    on capability (tests skip-mark when absent, SURVEY.md §7 risks).
-    For the jar-free engine-native equivalent (log-structured commits,
-    version/timestamp travel), see ``snapshots.py``."""
-    return spark.read.table(f"{table}.snapshots")
 
 
 def show_verification(df: DataFrame, n: int = 5) -> None:

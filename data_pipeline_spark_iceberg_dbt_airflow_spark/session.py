@@ -3,8 +3,9 @@
 Mirrors the reference's session builder
 (`/root/reference/Iceberg-dbt-project/scripts/extract_bitcoin_prices.py:13-37`)
 minus the container endpoints: the reference wires an Iceberg REST catalog +
-S3A/MinIO; we default to local Parquet and expose the Iceberg catalog configs
-behind an opt-in flag so the same code runs when the runtime jar is present.
+S3A/MinIO; here tables are plain Parquet, and the Iceberg capabilities the
+reference uses (append, overwrite, snapshots, time travel) come from
+``snapshots.py``, so the session needs no catalog or runtime jar.
 
 Scale notes (100 TB target):
 - AQE is on: runtime partition coalescing, skew-join splitting, and
@@ -38,15 +39,9 @@ def get_spark_session(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     driver_memory: str | None = None,
-    enable_iceberg: bool = False,
-    iceberg_warehouse: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine.
-
-    ``enable_iceberg`` adds the Iceberg catalog configs the reference uses
-    (extract_bitcoin_prices.py:23-30); it only works when the
-    iceberg-spark-runtime jar is on the classpath, so it is opt-in.
 
     Session-wide contract: ``spark.sql.legacy.parquet.nanosAsLong=true`` is
     set HERE, deliberately and globally -- parquet TIMESTAMP(NANOS) columns
@@ -134,28 +129,9 @@ def get_spark_session(
             driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
         )
     )
-    if enable_iceberg:
-        warehouse = iceberg_warehouse or "/tmp/iceberg-warehouse"
-        builder = (
-            builder.config(
-                "spark.sql.extensions",
-                "org.apache.iceberg.spark.extensions.IcebergSparkSessionExtensions",
-            )
-            .config("spark.sql.catalog.iceberg", "org.apache.iceberg.spark.SparkCatalog")
-            .config("spark.sql.catalog.iceberg.type", "hadoop")
-            .config("spark.sql.catalog.iceberg.warehouse", warehouse)
-        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-def iceberg_available(spark: SparkSession) -> bool:
-    """True when the Iceberg runtime jar is loadable in this JVM."""
-    try:
-        spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:
-        return False

@@ -3,11 +3,14 @@ listing, and time travel over plain parquet.
 
 The reference's S11 capability is Iceberg snapshot metadata + time
 travel (`SELECT * FROM t.snapshots`, rollback by snapshot id --
-/root/reference/README.md:301,712). This sandbox has no
-iceberg-spark-runtime jar (probe evidence: SCALING.md), so
-``io.read_snapshots`` stays capability-gated; THIS module provides the
-same contract engine-natively, with the standard log-structured table
-format design (the mechanism Iceberg/Delta themselves use):
+the reference's README.md:301,712). The engine runs without the
+iceberg-spark-runtime jar (SCALING.md), so THIS module provides the
+same contract engine-natively and is its only table writer: the
+reference's append (S6) and CTAS (S8) sinks are ``snapshot_append``
+and ``snapshot_overwrite``, its ``.snapshots`` scan (S11) is
+``snapshot_versions`` and ``snapshot_read``. It uses the standard
+log-structured table format design (the mechanism Iceberg/Delta
+themselves use):
 
 - Every commit writes its data files ONCE under an immutable,
   uuid-named directory ``<table>/data/<uuid>/`` -- files are never

@@ -1,5 +1,7 @@
 """Ingestion (S1-S5), pipeline runner (D2/D5), quality checks (D3), and
-writer (S6/S8/S10) tests over the bitcoin-shaped fixture.
+partitioned-table DDL (S10) tests over the bitcoin-shaped fixture. The
+append (S6), replace (S8) and snapshot (S11) sinks are ``snapshots.py``'s,
+tested in tests/test_snapshots.py.
 
 This is SURVEY.md §5's "Pipeline test": the reference's whole DAG --
 extract -> transform -> test -- run in-process on injected fake fetchers,
@@ -15,7 +17,7 @@ import duckdb
 import pytest
 
 from data_pipeline_spark_iceberg_dbt_airflow_spark.functions import det
-from data_pipeline_spark_iceberg_dbt_airflow_spark.io import write_table
+from data_pipeline_spark_iceberg_dbt_airflow_spark.io import create_table_like
 from data_pipeline_spark_iceberg_dbt_airflow_spark.plans.models import (
     fct_daily,
     stg_from_raw,
@@ -30,6 +32,10 @@ from data_pipeline_spark_iceberg_dbt_airflow_spark.quality import (
     relationships,
     run_checks,
     unique,
+)
+from data_pipeline_spark_iceberg_dbt_airflow_spark.snapshots import (
+    snapshot_overwrite,
+    snapshot_read,
 )
 from data_pipeline_spark_iceberg_dbt_airflow_spark.sources import (
     BITCOIN_SCHEMA,
@@ -284,15 +290,15 @@ def test_pipeline_matches_duckdb_oracle(spark, tmp_path):
     """raw -> stg -> fct hash-matches DuckDB running the reference's model
     SQL (README.md:368-400) with the engine's det.davg formula."""
     raw_path = str(tmp_path / "raw_bitcoin_prices")
-    write_table(_raw_fixture(spark), raw_path, mode="replace")
-    fct = fct_daily(stg_from_raw(spark.read.parquet(raw_path)))
+    snapshot_overwrite(_raw_fixture(spark), raw_path)
+    fct = fct_daily(stg_from_raw(snapshot_read(spark, raw_path)))
     oracle_sql = f"""
         WITH stg AS (
             SELECT source AS data_source,
                    symbol AS crypto_symbol,
                    COALESCE(price_usd, 0) AS price_usd,
                    CAST(extracted_at AS DATE) AS extraction_date
-            FROM read_parquet('{raw_path}/*.parquet'))
+            FROM read_parquet('{raw_path}/data/*/*.parquet'))
         SELECT extraction_date, data_source, crypto_symbol,
                MIN(price_usd) AS min_price_usd,
                MAX(price_usd) AS max_price_usd,
@@ -365,42 +371,29 @@ def test_quality_checks_fail_on_violations(spark):
     assert not r.passed and r.failing_rows == 2  # NULL + 'zzz'
 
 
-# --- S6/S8/S10 writers ------------------------------------------------------
+# --- S10 partitioned table DDL ----------------------------------------------
 
 
-def test_write_append_accumulates(spark, tmp_path):
-    target = str(tmp_path / "t_append")
-    df = _raw_fixture(spark)
-    n = df.count()
-    write_table(df, target, mode="append")
-    write_table(df, target, mode="append")
-    assert spark.read.parquet(target).count() == 2 * n
+def test_write_partitioned_layout(spark):
+    """The engine's rendering of Iceberg's hidden day partitioning (S10,
+    extract_bitcoin_prices.py:131-145): ``create_table_like`` partitioned
+    on the derived ``extraction_date``, filled with the staged fixture,
+    holds one partition per date."""
+    import uuid
 
-
-def test_write_replace_overwrites(spark, tmp_path):
-    target = str(tmp_path / "t_replace")
-    df = _raw_fixture(spark)
-    write_table(df, target, mode="append")
-    write_table(df, target, mode="replace")
-    assert spark.read.parquet(target).count() == df.count()
-
-
-def test_write_partitioned_layout(spark, tmp_path):
-    """Parquet rendering of Iceberg's hidden day partitioning (S10,
-    extract_bitcoin_prices.py:144): one directory per extraction_date,
-    readable back with identical content."""
-    import os
-
-    target = str(tmp_path / "t_part")
+    name = f"s10_part_{uuid.uuid4().hex[:12]}"
     stg = stg_from_raw(_raw_fixture(spark))
-    write_table(stg, target, mode="replace", partition_by=["extraction_date"])
-    parts = [d for d in os.listdir(target) if d.startswith("extraction_date=")]
-    assert len(parts) == 2  # two distinct dates in the fixture
-    back = spark.read.parquet(target)
-    assert back.count() == stg.count()
-    # partition pruning: filtering one date must scan one partition
-    one = back.where("extraction_date = DATE'2024-03-01'")
-    assert one.count() == 5  # batch1 (3 sources) + degraded batch2 (2)
+    cols = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in stg.schema)
+    try:
+        create_table_like(spark, name, cols, partition_by="extraction_date")
+        stg.write.insertInto(name)
+        assert spark.sql(f"SHOW PARTITIONS {name}").count() == 2  # two dates
+        back = spark.table(name)
+        assert back.count() == stg.count()
+        one = back.where("extraction_date = DATE'2024-03-01'")
+        assert one.count() == 5  # batch1 (3 sources) + degraded batch2 (2)
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
 # --- D4 retry policy + P6 model selection -----------------------------------
@@ -480,21 +473,6 @@ def test_runner_target_selection(spark):
     out = runner.run(targets=["fct"], seeds={"raw": _raw_fixture(spark)})
     assert ran == ["stg", "fct"]  # 'other' not selected, deps in order
     assert "other" not in out
-
-
-# --- S11 Iceberg time travel (capability-gated) -----------------------------
-
-
-def test_snapshots_scan_requires_iceberg(spark):
-    from data_pipeline_spark_iceberg_dbt_airflow_spark.io import read_snapshots
-    from data_pipeline_spark_iceberg_dbt_airflow_spark.session import (
-        iceberg_available,
-    )
-
-    if iceberg_available(spark):  # pragma: no cover - jar not in this env
-        pytest.skip("iceberg present: covered by integration deployment")
-    with pytest.raises(Exception):
-        read_snapshots(spark, "nonexistent.table").collect()
 
 
 # --- file source formats (JSONL / CSV) --------------------------------------
