@@ -35,6 +35,7 @@ from __future__ import annotations
 import datetime as dt
 import os
 import weakref
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,131 +54,103 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-#: (path) -> list of column names stored as TIMESTAMP(NANOS) in the footer.
-_NANOS_COLS_CACHE: dict[str, list[str]] = {}
+@dataclass(frozen=True)
+class Footer:
+    """What a table's parquet footers say, read without a Spark job.
 
-
-def _nanos_columns(path: str) -> list[str]:
-    """Columns written as nanosecond timestamps (Spark 4 rejects them raw).
-
-    Multi-file tables (a directory of part files) probe the first part's
-    footer -- one table, one schema; a writer that mixed ns and us
-    timestamp units across parts would fail Spark's own schema merge
-    before this probe could matter. A probe that cannot be read (empty
-    directory, corrupt first part) reports NO nanos columns rather than
-    raising: this is a best-effort rewrite hint, and the genuinely
-    broken table then fails in the Spark scan with the real error
-    instead of a pyarrow footer traceback (same contract as
-    table_row_count's None)."""
-    if path not in _NANOS_COLS_CACHE:
-        import pyarrow.parquet as pq
-
-        probe = path
-        if os.path.isdir(path):
-            parts = sorted(
-                f
-                for f in os.listdir(path)
-                if f.endswith(".parquet") and not f.startswith(("_", "."))
-            )
-            if parts:
-                probe = os.path.join(path, parts[0])
-        try:
-            schema = pq.read_schema(probe)
-        except Exception:
-            # degrade to "no nanos columns" for THIS call but do NOT
-            # cache the failure: a transient probe error (table still
-            # being written, flaky NFS) would otherwise poison the
-            # process-lifetime cache and skip the ns->us widen forever
-            # after the fault clears (r11 review)
-            return []
-        cols = [f.name for f in schema if str(f.type) == "timestamp[ns]"]
-        _NANOS_COLS_CACHE[path] = cols
-    return _NANOS_COLS_CACHE[path]
-
-
-_ROW_GROUPS_CACHE: dict[str, int | None] = {}
-
-
-def _row_group_count(path: str) -> int | None:
-    """Row groups in a single parquet file (footer-only; None when the
-    path is not one readable file). Row groups, not file SPLITS, are
+    ``nanos_cols``: columns stored as TIMESTAMP(NANOS) (Spark 4 rejects
+    them raw), from the first part's schema -- one table, one schema; a
+    writer that mixed ns and us units across parts would fail Spark's
+    own schema merge first. ``row_groups``: row groups of a single-file
+    table (None for a directory). Row groups, not file SPLITS, are
     parquet's parallelism quantum: a split containing no row-group
     midpoint yields an EMPTY Spark partition, so a big single file with
     default 128MB row groups scans as ~size/128MB busy tasks no matter
-    how many splits the scheduler cuts."""
-    if path not in _ROW_GROUPS_CACHE:
+    how many splits the scheduler cuts. ``rows``: the sum over the part
+    footers (None when they could not be read)."""
+
+    nanos_cols: tuple[str, ...] = ()
+    row_groups: int | None = None
+    rows: int | None = None
+
+
+#: (table path) -> its Footer; testdata tables are immutable, so each
+#: table is listed and each part footer read once per process.
+_FOOTERS: dict[str, Footer] = {}
+
+
+def _footer(path: str) -> Footer:
+    """The memoized :class:`Footer` of the table at ``path`` (one file or
+    a directory of part files).
+
+    A table whose footers cannot be read (missing, empty directory,
+    corrupt part) reports no nanos columns and no counts rather than
+    raising: these are best-effort hints, and a genuinely broken table
+    then fails in the Spark scan with the real error instead of a
+    pyarrow footer traceback. That verdict is NOT cached: a transient
+    probe error (table still being written, flaky NFS) would otherwise
+    poison the process-lifetime cache and skip the ns->us widen forever
+    after the fault clears (r11 review)."""
+    footer = _FOOTERS.get(path)
+    if footer is None:
+        import pyarrow.parquet as pq
+
         try:
-            import pyarrow.parquet as pq
-
-            meta = pq.ParquetFile(path).metadata
-            _ROW_GROUPS_CACHE[path] = meta.num_row_groups
-            _ROW_COUNT_CACHE[path] = meta.num_rows
+            single = not os.path.isdir(path)
+            parts = [path] if single else [
+                os.path.join(path, f)
+                for f in sorted(os.listdir(path))
+                if f.endswith(".parquet") and not f.startswith(("_", "."))
+            ]
+            metas = [pq.read_metadata(p) for p in parts]
+            schema = metas[0].schema.to_arrow_schema()
         except Exception:
-            _ROW_GROUPS_CACHE[path] = None
-            _ROW_COUNT_CACHE[path] = None
-    return _ROW_GROUPS_CACHE[path]
-
-
-_ROW_COUNT_CACHE: dict[str, int | None] = {}
-
-#: Paths whose multi-file footer-sum probe already ran (hit or miss).
-_DIR_COUNT_PROBED: set[str] = set()
+            return Footer()
+        footer = _FOOTERS[path] = Footer(
+            nanos_cols=tuple(
+                f.name for f in schema if str(f.type) == "timestamp[ns]"
+            ),
+            row_groups=metas[0].num_row_groups if single else None,
+            rows=sum(m.num_rows for m in metas),
+        )
+    return footer
 
 
 def table_row_count(sf_dir: str, name: str) -> int | None:
     """Footer-only row count of a testdata table (None when the path is
     neither one readable parquet file nor a directory of them). The
-    cheap corpus-size probe for plan-shape decisions (e.g. the lexical
-    near-dup candidate generator switches to banded MinHash above a
-    size bound): reads ~1KB of footer per file, never a Spark job.
-    Multi-file tables (a directory of part files -- the shape every
-    REAL corpus arrives in) sum per-file footers; before round 10 they
-    returned None, which silently parked exactly the at-scale corpora
-    the size-gated plans exist for on their small-N path (round-9
-    ADVICE). On a catalog table the same number comes from table
-    statistics; callers for whom None is load-bearing fall back to a
-    one-column count job (see lexical_components)."""
+    cheap corpus-size probe for plan-shape decisions that must not pay
+    a Spark job (e.g. the span-dedup kernel switch): reads ~1KB of
+    footer per file. Multi-file tables (a directory of part files --
+    the shape every REAL corpus arrives in) sum per-file footers; before
+    round 10 they returned None, which silently parked exactly the
+    at-scale corpora the size-gated plans exist for on their small-N
+    path (round-9 ADVICE). On a catalog table the same number comes from
+    table statistics; callers for whom None is load-bearing use
+    :func:`table_rows`."""
+    return _footer(table_path(sf_dir, name)).rows
+
+
+def table_rows(spark: SparkSession, sf_dir: str, name: str) -> int:
+    """Row count of a testdata table: the footer count, else ONE count
+    job over :func:`read_table`, pinned so every later probe of the same
+    table (this one or :func:`table_row_count`) is a dict hit. A silent
+    default would park an unprobeable corpus on the small-N plan at
+    exactly the scale the size gates exist for (round-9 ADVICE);
+    ``count(*)`` over parquet is a column-pruned metadata scan. The pin
+    records what the count's scan saw: no nanos columns and no row
+    groups."""
     path = table_path(sf_dir, name)
-    if path not in _ROW_COUNT_CACHE:
-        _row_group_count(path)
-    # the dir probe runs at most once per path, and independently of
-    # whether _row_group_count already cached a None (read_table's
-    # widen probe does, for every directory table)
-    if path not in _DIR_COUNT_PROBED:
-        _DIR_COUNT_PROBED.add(path)
-        if _ROW_COUNT_CACHE[path] is None and os.path.isdir(path):
-            try:
-                import pyarrow.parquet as pq
-
-                parts = [
-                    os.path.join(path, f)
-                    for f in sorted(os.listdir(path))
-                    if f.endswith(".parquet")
-                    and not f.startswith(("_", "."))
-                ]
-                if parts:
-                    _ROW_COUNT_CACHE[path] = sum(
-                        pq.ParquetFile(p).metadata.num_rows for p in parts
-                    )
-            except Exception:
-                _ROW_COUNT_CACHE[path] = None
-    return _ROW_COUNT_CACHE[path]
-
-
-def record_row_count(sf_dir: str, name: str, n: int) -> None:
-    """Pin a row count learned by other means (a caller's count job on
-    a table whose footers could not be probed), so every later
-    plan-shape probe of the same table is a dict hit instead of another
-    Spark job. Testdata tables are immutable within a session, so the
-    pin cannot go stale."""
-    _ROW_COUNT_CACHE[table_path(sf_dir, name)] = int(n)
+    rows = _footer(path).rows
+    if rows is None:
+        rows = read_table(spark, sf_dir, name).count()
+        _FOOTERS[path] = Footer(rows=rows)
+    return rows
 
 
 def _ensure_nanos_conf(spark: SparkSession) -> None:
@@ -187,7 +160,7 @@ def _ensure_nanos_conf(spark: SparkSession) -> None:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
 
-def _convert_ns(df: DataFrame, ns_cols: list[str]) -> DataFrame:
+def _convert_ns(df: DataFrame, ns_cols: tuple[str, ...]) -> DataFrame:
     """Floor-convert raw INT64 nano columns to microsecond TimestampType.
 
     `x DIV 1000` keeps full integer precision; DuckDB 1.0's parquet reader
@@ -337,7 +310,7 @@ def read_table(
     scans = session_cache(spark, "scan")
     df = scans.get(path)
     if df is None:
-        ns_cols = _nanos_columns(path)
+        ns_cols = _footer(path).nanos_cols
         if ns_cols:
             _ensure_nanos_conf(spark)
         df = scans[path] = _convert_ns(_raw_scan(spark, path), ns_cols)
@@ -351,7 +324,7 @@ def read_table(
         wdf = scans.get(wkey)
         if wdf is None:
             par = spark.sparkContext.defaultParallelism
-            rg = _row_group_count(path)
+            rg = _footer(path).row_groups
             eff = df.rdd.getNumPartitions()
             if rg is not None:
                 eff = min(eff, rg)
@@ -397,8 +370,9 @@ def scan_time_range(
     skipping everything outside the window via parquet min/max stats.
     """
     path = table_path(sf_dir, name)
-    ns_cols = _nanos_columns(path)
-    _ensure_nanos_conf(spark)
+    ns_cols = _footer(path).nanos_cols
+    if ns_cols:
+        _ensure_nanos_conf(spark)
     df = _raw_scan(spark, path)
     if ts_col in ns_cols:
         if lo_iso is not None:
@@ -505,12 +479,6 @@ def _with_corrupt_col(spark: SparkSession, schema):
     return StructType(
         list(schema.fields) + [StructField(CORRUPT_COL, StringType(), True)]
     )
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    return {n: read_table(spark, sf_dir, n) for n in names}
 
 
 def register_views(

@@ -51,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..io import read_table, table_row_count
+from ..io import read_table, table_row_count, table_rows
 from ..queries.dedup import (
     contaminated_docs,
     lexical_components,
@@ -475,12 +475,11 @@ def build_llm_curation_pipeline(
         # blocked-pair path switch (expected candidates ~ N^2/2k --
         # semdedup's no-hint fallback keys on k*dim, which is
         # anti-correlated with pair cost; round-9 ADVICE)
-        n_docs = _corpus_rows()
-        if n_docs is None:
-            from ..io import record_row_count
-
-            n_docs = read_table(spark, sf_dir, "documents").count()
-            record_row_count(sf_dir, "documents", n_docs)
+        n_docs = (
+            corpus_rows
+            if corpus_rows is not None
+            else table_rows(spark, sf_dir, "documents")
+        )
         k = default_sem_k(n_docs) if sem_k is None else sem_k
         eps = DEFAULT_EPS if sem_eps is None else sem_eps
 

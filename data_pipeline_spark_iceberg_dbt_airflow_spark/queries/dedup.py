@@ -66,6 +66,7 @@ from ..io import (
     release_frames,
     session_cache,
     table_row_count,
+    table_rows,
 )
 from ..operators.graph import connected_components
 from .registry import register
@@ -485,14 +486,11 @@ def _index_lineage(
         if use_kernel
         else _shingle_rows_expr(docs)
     )
-    # Scale-aware cap: footer row count (no Spark job); an unprobeable
-    # corpus pays ONE count job rather than silently taking the
-    # absolute floor at scale (the r10 lexical-gate posture -- and the
-    # floor-at-scale failure is exactly the r11 4M over-merge,
-    # see DF_CAP_RATIO).
-    n_docs = table_row_count(sf_dir, "documents")
-    if n_docs is None:
-        n_docs = docs.count()
+    # Scale-aware cap: an unprobeable corpus pays ONE count job rather
+    # than silently taking the absolute floor at scale (the
+    # floor-at-scale failure is exactly the r11 4M over-merge, see
+    # DF_CAP_RATIO).
+    n_docs = table_rows(spark, sf_dir, "documents")
     # The df-cap drops HOT shingles, and hot shingles are few by
     # definition (df > DF_CAP can hold for at most n_rows/DF_CAP distinct
     # shingles) -- so ship the DROP set as a broadcast anti-join instead
@@ -1363,21 +1361,9 @@ def lexical_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         rep_map.where(F.col("doc_id") == F.col("rep")).select("doc_id"),
         "doc_id",
     )
-    n_docs = table_row_count(sf_dir, "documents")
-    if n_docs is None:
-        # The footer probe covers single files and directories of part
-        # files; anything it cannot read gets ONE count job rather than
-        # a silent default -- before round 10 an unprobeable corpus fell
-        # back to the direct self-join, i.e. the superlinear path, at
-        # exactly the multi-file scale the LSH gate exists for (round-9
-        # ADVICE). count(*) over parquet is a column-pruned metadata
-        # scan: trivial next to either candidate path -- and the result
-        # is pinned so later probes of the same table are free.
-        from ..io import record_row_count
-
-        n_docs = read_table(spark, sf_dir, "documents").count()
-        record_row_count(sf_dir, "documents", n_docs)
-    if n_docs > LEXICAL_LSH_BOUND:
+    # an unprobeable corpus pays one count job, never the superlinear
+    # self-join at exactly the scale the LSH gate exists for
+    if table_rows(spark, sf_dir, "documents") > LEXICAL_LSH_BOUND:
         pairs = _verify_candidates(rep_sh, _minhash_candidates(rep_sh))
     else:
         pairs = _pair_jaccard(rep_sh)

@@ -52,10 +52,12 @@ themselves use):
   more than 32 root paths
   (``spark.sql.sources.parallelPartitionDiscovery.threshold``) launch
   Spark's parallel-listing job (on a 4-core host: 33 or 40 paths 1 job
-  and about 0.26 s, 32 paths 0 jobs and 0.05 s), so a table crosses
-  that cliff only after 32 appends; compaction is what keeps an aging table under it. Time
-  travel by timestamp picks the newest manifest committed at or before
-  the requested instant.
+  and about 0.26 s, 32 paths 0 jobs and 0.05 s). Each append adds a
+  live directory and ``snapshot_vacuum`` never merges them, so an
+  hourly table crosses that cliff after 32 appends; a
+  ``snapshot_compact`` that rewrites the live directories into one is
+  open work (ROADMAP direction 1). Time travel by timestamp picks the
+  newest manifest committed at or before the requested instant.
 - Every manifest is a FULL state: it names every live directory and
   carries the whole snapshot summary, never a delta against its
   parent. One manifest therefore defines its snapshot alone, and each

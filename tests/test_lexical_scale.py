@@ -187,13 +187,24 @@ def test_multifile_table_row_count_sums_footers(multifile_corpus, corpus):
 def test_unprobeable_count_falls_back_to_count_job_not_direct_join(
     spark, multifile_corpus, monkeypatch
 ):
-    """When the footer probe cannot resolve a row count, the candidate
-    generator must pay ONE count job and still take the size-gated LSH
-    path -- not silently fall back to the superlinear self-join
-    (round-9 ADVICE). _pair_jaccard is boobytrapped: reaching it means
-    the direct path was chosen."""
+    """When the footers cannot be read, the candidate generator must pay
+    ONE count job and still take the size-gated LSH path -- not silently
+    fall back to the superlinear self-join (round-9 ADVICE).
+    _pair_jaccard is boobytrapped: reaching it means the direct path was
+    chosen. The count is pinned, so the footer-only probe returns it."""
+    import pyarrow.parquet as pq
+
+    from data_pipeline_spark_iceberg_dbt_airflow_spark import io
+
+    def unreadable(*a, **k):
+        raise OSError("footer unreadable")
+
+    # a fresh footer cache: the module-scoped corpus may already be
+    # probed, and the pin must not outlive this test
+    monkeypatch.setattr(io, "_FOOTERS", {})
+    monkeypatch.setattr(pq, "read_metadata", unreadable)
     monkeypatch.setattr(dedup, "LEXICAL_LSH_BOUND", 1)
-    monkeypatch.setattr(dedup, "table_row_count", lambda *a: None)
+    assert io.table_row_count(multifile_corpus, "documents") is None
 
     def boom(*a, **k):
         raise AssertionError("direct self-join taken despite size > bound")
@@ -206,6 +217,7 @@ def test_unprobeable_count_falls_back_to_count_job_not_direct_join(
     )
     want = _mapping(_direct_reference(spark, multifile_corpus))
     assert got == want
+    assert io.table_row_count(multifile_corpus, "documents") == len(want)
 
 
 def test_verify_candidates_matches_pair_jaccard(spark, corpus):
@@ -268,20 +280,24 @@ def test_shingle_kernel_bit_equal_expr_adversarial(spark):
 
 
 def test_nanos_probe_unreadable_dir_reports_no_columns(tmp_path):
-    # ADVICE r10: an empty directory table (or unreadable first part)
-    # must degrade to "no nanos columns" -- the real failure then
-    # surfaces in the Spark scan, not as a pyarrow footer traceback
+    # ADVICE r10: an empty directory table (or unreadable part) must
+    # degrade to "no nanos columns, no counts" -- the real failure then
+    # surfaces in the Spark scan, not as a pyarrow footer traceback --
+    # and the verdict is not cached (a transient error must not stick)
     from data_pipeline_spark_iceberg_dbt_airflow_spark.io import (
-        _nanos_columns,
+        _FOOTERS,
+        Footer,
+        _footer,
     )
 
     empty = tmp_path / "empty_table.parquet"
     empty.mkdir()
-    assert _nanos_columns(str(empty)) == []
+    assert _footer(str(empty)) == Footer()
     corrupt = tmp_path / "corrupt_table.parquet"
     corrupt.mkdir()
     (corrupt / "part-00000.parquet").write_bytes(b"not parquet")
-    assert _nanos_columns(str(corrupt)) == []
+    assert _footer(str(corrupt)).nanos_cols == ()
+    assert str(empty) not in _FOOTERS and str(corrupt) not in _FOOTERS
 
 
 def test_df_cap_scales_with_corpus_size():
